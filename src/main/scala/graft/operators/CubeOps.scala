@@ -14,21 +14,21 @@ import graft.syntax._
 object CubeOps {
 
   /** A1 element-wise IVW stack over vectors — groups embeddings by label
-    * and stacks the 64-dim vectors with per-row sigma, via the typed
-    * [[IvwStackAggregator]] (partial-agg friendly: only one buffer pair
-    * per group crosses the shuffle). Result flattened to (label, idx) rows
-    * for the oracle. (SURVEY §2.6 A1/A2)
+    * and stacks the 64-dim f32 vectors with per-row sigma, via the native
+    * [[IvwStackAggregator]] (a `TypedImperativeAggregate`: partial-agg
+    * friendly, only one buffer pair per group crosses the shuffle).
+    * Result flattened to (label, idx) rows for the oracle.
+    * (SURVEY §2.6 A1/A2)
     */
   def q30IvwStack(s: SparkSession, dir: String): DataFrame = {
-    val ivw = udaf(new IvwStackAggregator(64))
     val sig = ($"vec_id" % 7).cast("double") * 0.1 + 0.5
     load(s, dir, "embeddings")
       .select(
         $"label",
-        transform($"embedding", _.cast("double")).as("flux"),
+        $"embedding".as("flux"),
         transform($"embedding", x => sig).as("sigma"))
       .groupBy($"label")
-      .agg(ivw($"flux", $"sigma").as("stk"))
+      .agg(IvwStackAggregator.stack($"flux", $"sigma").as("stk"))
       .select($"label", posexplode(col("stk._1")).as(Seq("pos", "mu")))
       .withColumn("idx", ($"pos" + 1).cast("long"))
       .select(

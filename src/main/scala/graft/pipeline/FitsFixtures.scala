@@ -2,6 +2,7 @@ package graft.pipeline
 
 import java.io.{BufferedOutputStream, DataOutputStream, FileOutputStream}
 import java.nio.charset.StandardCharsets
+import java.nio.file.{Files, Paths}
 
 /** Synthetic SDSS-shaped FITS writers for pipeline tests (FIXTURES.md §1).
   * Deterministic miniature frames/spectra positioned wherever a test
@@ -158,6 +159,22 @@ object FitsFixtures {
       }
       padBlock(fib, 8L * keys.length)
     } finally fib.close()
+  }
+
+  /** Synthetic `ccd_gain.tsv` / `ccd_dark_variance.tsv` in the schema
+    * `SdssFits.readCcdTsv` parses (camcol, run predicate, one column per
+    * band): one row per camcol 1-6 matching every run, so frames decode
+    * without the reference's config directory. */
+  def writeCcdConfig(dir: String): Unit = {
+    def table(base: Double): String =
+      ("camcol\trun\tu\tg\tr\ti\tz" +: (1 to 6).map { c =>
+        (Seq(c.toString, ">0") ++ (0 until 5).map(b => f"${base + 0.1 * c + 0.05 * b}%.3f"))
+          .mkString("\t")
+      }).mkString("", "\n", "\n")
+    Files.createDirectories(Paths.get(dir))
+    Seq("ccd_gain.tsv" -> 1.5, "ccd_dark_variance.tsv" -> 8.0).foreach { case (f, base) =>
+      Files.write(Paths.get(dir, f), table(base).getBytes(StandardCharsets.US_ASCII))
+    }
   }
 
   /** Standard synthetic spectrum grid: loglam over [3.59, 3.95], all

@@ -9,12 +9,15 @@ import graft.sources.SdssFits
 
 /** Ingest phase: FITS directories → typed observation Datasets with full
   * zoom pyramids (reference phases "metadata-cache/metadata/data",
-  * SURVEY §3.1 — in Spark they collapse into one distributed scan; each
-  * file is decoded exactly once, in the executor that owns its split).
+  * SURVEY §3.1 — in Spark they collapse into one distributed scan).
   *
-  * Scale shape: `binaryFile` scan parallelizes per file; the flatMap is
-  * per-partition pure compute (no shuffle); the optional write partitions
-  * by zoom and range-sorts by healpix so downstream joins prune (I3/I4).
+  * Scale shape: the decode flatMap runs in the same task as the
+  * `binaryFile` scan of its split — no exchange in between — so decoding
+  * is exactly as wide as the scan's file partitions, and so are the
+  * map-side stages over a cached result. Each action that is not served from a
+  * cache decodes again, which is why [[BuildCube]] caches both tables.
+  * The optional write partitions by zoom and range-sorts by healpix so
+  * downstream joins prune (I3/I4).
   */
 object Ingest {
 
@@ -62,14 +65,13 @@ object Ingest {
   /** S1 recursive scan + S5 spectrum decode + X1 pyramid fan-out. */
   def spectra(
       spark: SparkSession, dir: String,
-      pattern: String = "*.fits", limit: Int = Int.MaxValue,
+      pattern: String = "*.fits",
       zoomCnt: Int = SpecZoomCnt): Dataset[SpectrumObs] = {
     import spark.implicits._
     val files = spark.read.format("binaryFile")
       .option("pathGlobFilter", pattern)
       .option("recursiveFileLookup", "true")
       .load(dir)
-      .limit(limit)
       .select("path", "content").as[(String, Array[Byte])]
     decodeSpectra(files, zoomCnt)
   }
@@ -79,7 +81,7 @@ object Ingest {
     * closure (tiny broadcast analogue of the reference's config cache). */
   def images(
       spark: SparkSession, dir: String, ccdConfigDir: String,
-      pattern: String = "*.fits*", limit: Int = Int.MaxValue,
+      pattern: String = "*.fits*",
       zoomCnt: Int = ImgZoomCnt): Dataset[ImageObs] = {
     import spark.implicits._
     val gains = SdssFits.readCcdTsv(s"$ccdConfigDir/ccd_gain.tsv")
@@ -88,7 +90,6 @@ object Ingest {
       .option("pathGlobFilter", pattern)
       .option("recursiveFileLookup", "true")
       .load(dir)
-      .limit(limit)
       .select("path", "content").as[(String, Array[Byte])]
     decodeImages(files, gains, darkVars, zoomCnt)
   }

@@ -11,8 +11,9 @@ import graft.functions.IvwStackAggregator
   * line 652), group them by band and IVW-stack per band; keep only
   * targets with all 5 bands (lines 261-262).
   *
-  * Scale shape: every stack is a RELATIONAL aggregate over the
-  * [[IvwStackAggregator]] udaf, so partial aggregation (map-side combine)
+  * Scale shape: every stack is a RELATIONAL aggregate over the native
+  * [[IvwStackAggregator]] (a `TypedImperativeAggregate` reading the f32
+  * pixel arrays in place), so partial aggregation (map-side combine)
   * collapses repeat observations of a target to one (ΣW, ΣWF) buffer pair
   * per group BEFORE the shuffle — with healpix-sorted storage the repeats
   * co-locate and only #targets × 2×n doubles cross the wire, never the
@@ -39,13 +40,10 @@ object MlCube {
   def specStacks(spectra: Dataset[SpectrumObs]): Dataset[SpecStack] = {
     val spark = spectra.sparkSession
     import spark.implicits._
-    val ivw = udaf(new IvwStackAggregator())
     spectra.toDF()
-      .select($"healpix", $"zoom", $"time", $"spec_id",
-        toDoubleArr($"flux").as("flux_d"), toDoubleArr($"sigma").as("sigma_d"))
       .groupBy($"healpix", $"zoom")
       .agg(
-        ivw($"flux_d", $"sigma_d").as("stk"),
+        IvwStackAggregator.stack($"flux", $"sigma").as("stk"),
         count(lit(1)).cast("int").as("n_spectra"),
         sort_array(collect_list(struct($"time", $"spec_id"))).as("prov"))
       .select(
@@ -60,7 +58,8 @@ object MlCube {
   }
 
   /** Re-chunk a flattened row-major pixel vector back to h×w (the stack
-    * runs element-wise over the flat form so one udaf serves all shapes). */
+    * runs element-wise over the flat form so one aggregate serves all
+    * shapes). */
   private def rechunk(a: Column, w: Column): Column =
     transform(sequence(lit(0), (size(a) / w).cast("int") - 1),
       r => toFloatArr(slice(a, r * w + 1, w)))
@@ -74,7 +73,6 @@ object MlCube {
       broadcastLinks: Boolean = true): Dataset[MlCubeRow] = {
     val spark = spectra.sparkSession
     import spark.implicits._
-    val ivw = udaf(new IvwStackAggregator())
 
     val stacks = specStacks(spectra)
 
@@ -102,11 +100,11 @@ object MlCube {
     val bandStacks = cut
       .select($"target_healpix", $"zoom", $"band", $"image_id",
         size(element_at($"flux", 1)).as("w"),
-        toDoubleArr(flatten($"flux")).as("flux1d"),
-        toDoubleArr(flatten($"sigma")).as("sigma1d"))
+        flatten($"flux").as("flux1d"),
+        flatten($"sigma").as("sigma1d"))
       .groupBy($"target_healpix", $"zoom", $"band")
       .agg(
-        ivw($"flux1d", $"sigma1d").as("stk"),
+        IvwStackAggregator.stack($"flux1d", $"sigma1d").as("stk"),
         first($"w").as("w"),
         sort_array(collect_set($"image_id")).as("image_ids"))
       .select($"target_healpix", $"zoom", $"band",
@@ -197,7 +195,4 @@ object MlCube {
       .select($"zoom", $"spec_id", $"image_id", $"band",
         sliceCol($"img_flux").as("flux"), sliceCol($"img_sigma").as("sigma"))
   }
-
-  def sliceRows(a: Array[Array[Float]], y0: Int, y1: Int, x0: Int, x1: Int): Array[Array[Float]] =
-    java.util.Arrays.copyOfRange(a, y0, y1).map(r => java.util.Arrays.copyOfRange(r, x0, x1))
 }

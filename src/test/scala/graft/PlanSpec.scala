@@ -103,6 +103,21 @@ class PlanSpec extends AnyFunSuite {
     assert("ObjectHashAggregate".r.findAllIn(p).size >= 2, p)
     // frames must stream through a broadcast join against the link projection
     assert(p.contains("BroadcastHashJoin"), "cutout join not broadcast:\n" + p)
+    // both stacks run as the native aggregate, partial and final, over the
+    // f32 arrays as stored: no encoder-based ScalaAggregator and no
+    // per-element cast-to-double pass feeding it
+    import org.apache.spark.sql.catalyst.expressions.aggregate.{Final, Partial}
+    val aggs = new org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {}
+      .collect(ml.queryExecution.executedPlan) {
+        case a: org.apache.spark.sql.execution.aggregate.BaseAggregateExec =>
+          a.aggregateExpressions
+      }.flatten
+    assert(!aggs.exists(_.aggregateFunction
+      .isInstanceOf[org.apache.spark.sql.execution.aggregate.ScalaAggregator[_, _, _]]), p)
+    val ivw = aggs.filter(_.aggregateFunction.isInstanceOf[graft.functions.IvwStackAggregator])
+    assert(ivw.count(_.mode == Partial) >= 2 && ivw.count(_.mode == Final) >= 2, p)
+    assert("""lambdafunction\(cast\(lambda [^)]* as double\)""".r.findFirstIn(p).isEmpty,
+      "cast pass feeds the stack:\n" + p)
   }
 
   test("link candidates prune pixel payloads out of both parquet scans") {

@@ -25,7 +25,7 @@ class IvwSpec extends AnyFunSuite {
       // (group, flux, sigma)
       (1, Seq(2.0, 4.0, nan, 5.0), Seq(1.0, 2.0, 1.0, 0.0)),
       (1, Seq(6.0, 8.0, 3.0, 7.0), Seq(1.0, 2.0, 1.0, Double.PositiveInfinity)))
-    val ivw = udaf(new IvwStackAggregator(4))
+    val ivw = IvwStackAggregator.stack _
     val out = rows.toDF("g", "flux", "sigma")
       .groupBy($"g").agg(ivw($"flux", $"sigma").as("r"))
       .select(col("r._1").as("mu"), col("r._2").as("sg"))
@@ -51,7 +51,7 @@ class IvwSpec extends AnyFunSuite {
 
   test("partial aggregation merge path (multi-partition) is identical") {
     import spark.implicits._
-    val ivw = udaf(new IvwStackAggregator(2))
+    val ivw = IvwStackAggregator.stack _
     val rows = (1 to 100).map(i => (i % 3, Seq(i.toDouble, 2.0 * i), Seq(1.0, 2.0)))
     val df = rows.toDF("g", "flux", "sigma").repartition(7)
     val got = df.groupBy($"g").agg(ivw($"flux", $"sigma").as("r"))

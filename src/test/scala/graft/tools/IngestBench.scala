@@ -45,7 +45,7 @@ object IngestBench {
     }
 
     // warmup JVM + session
-    Ingest.spectra(spark, specDir.toString, limit = 8).count()
+    Ingest.spectra(spark, specDir.toString).count()
 
     val t0 = System.nanoTime()
     val sRows = Ingest.spectra(spark, specDir.toString).count()
