@@ -164,7 +164,11 @@ object FitsFixtures {
   /** Synthetic `ccd_gain.tsv` / `ccd_dark_variance.tsv` in the schema
     * `SdssFits.readCcdTsv` parses (camcol, run predicate, one column per
     * band): one row per camcol 1-6 matching every run, so frames decode
-    * without the reference's config directory. */
+    * without the reference's config directory. PipelineSpec, UpdateSpec,
+    * FitsDataSourceSpec and IngestParallelismSpec decode their frames
+    * with it. The gain and dark-variance values are synthetic, not
+    * SDSS's, so no test may assert on them or on the image sigma they
+    * yield, beyond equality of two paths that read the same config. */
   def writeCcdConfig(dir: String): Unit = {
     def table(base: Double): String =
       ("camcol\trun\tu\tg\tr\ti\tz" +: (1 to 6).map { c =>

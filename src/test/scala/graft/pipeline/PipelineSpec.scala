@@ -8,8 +8,8 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.functions.Healpix
 import graft.sources.{Export, Fits}
 
-/** End-to-end pipeline test over synthetic SDSS-shaped FITS
-  * (FitsFixtures): ingest → link → ML cube → viz cube → SFR merge.
+/** End-to-end pipeline test over synthetic SDSS-shaped FITS and a
+  * synthetic CCD config (FitsFixtures): ingest → link → ML cube → viz cube → SFR merge.
   * Mirrors the reference's builder tests with formula-level expectations
   * (the golden 185-image galaxy_small set is not in the snapshot).
   */
@@ -49,9 +49,16 @@ class PipelineSpec extends AnyFunSuite {
     dir
   }
 
+  // synthetic CCD gain/dark-variance tables; no assertion reads their values
+  lazy val ccdConfig: String = {
+    val dir = graft.TempDirs.create("pipeline-ccd").toString
+    FitsFixtures.writeCcdConfig(dir)
+    dir
+  }
+
   lazy val spectra = Ingest.spectra(spark, root.resolve("spectra").toString).cache()
   lazy val images =
-    Ingest.images(spark, root.resolve("images").toString, "/root/reference/config").cache()
+    Ingest.images(spark, root.resolve("images").toString, ccdConfig).cache()
   lazy val links = Link.linkCutouts(spectra, images).cache()
 
   test("ingest: 3 spectra and 10 images, 5 zoom levels each") {
@@ -139,7 +146,7 @@ class PipelineSpec extends AnyFunSuite {
     val out = graft.TempDirs.create("out").toString
     val s = BuildCube.build(spark,
       root.resolve("spectra").toString, root.resolve("images").toString,
-      "/root/reference/config", out)
+      ccdConfig, out)
     assert(s.spectra == 15 && s.images == 50)
     assert(s.links == 75)
     assert(s.mlRows == 10)
@@ -207,12 +214,12 @@ class PipelineSpec extends AnyFunSuite {
     Files.writeString(csv, manifest.toString)
 
     val viaManifest = Ingest.imagesFromManifest(
-      spark, csv.toString, imgRoot.toString, "/root/reference/config").collect()
+      spark, csv.toString, imgRoot.toString, ccdConfig).collect()
     assert(viaManifest.length == 2 * 5, s"got ${viaManifest.length}")
     assert(viaManifest.map(_.run).toSet == Set(2000, 2001))
     assert(viaManifest.forall(_.field == 1))
     // identical observation rows to a direct directory scan of those files
-    val viaScan = Ingest.images(spark, imgRoot.toString, "/root/reference/config")
+    val viaScan = Ingest.images(spark, imgRoot.toString, ccdConfig)
       .collect().filter(o => o.field == 1 && o.run != 2999)
     assert(viaManifest.map(o => (o.image_id, o.zoom)).toSet ==
       viaScan.map(o => (o.image_id, o.zoom)).toSet)

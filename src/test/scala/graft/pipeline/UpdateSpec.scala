@@ -19,6 +19,13 @@ class UpdateSpec extends AnyFunSuite {
     .config("spark.sql.session.timeZone", "UTC")
     .getOrCreate()
 
+  // synthetic CCD gain/dark-variance tables; no assertion reads their values
+  lazy val ccdConfig: String = {
+    val dir = graft.TempDirs.create("update-ccd").toString
+    FitsFixtures.writeCcdConfig(dir)
+    dir
+  }
+
   def writeFixtures(): (Path, Path, Path) = {
     val dir = graft.TempDirs.create("update")
     val specAll = dir.resolve("spectra_all"); Files.createDirectories(specAll)
@@ -51,7 +58,7 @@ class UpdateSpec extends AnyFunSuite {
   test("update(one new spectrum) equals a from-scratch rebuild on every table") {
     import spark.implicits._
     val (dir, specInit, specNew) = writeFixtures()
-    val cfg = "/root/reference/config"
+    val cfg = ccdConfig
     val outInc = dir.resolve("cube_incremental").toString
     val outFull = dir.resolve("cube_full").toString
 
@@ -104,7 +111,7 @@ class UpdateSpec extends AnyFunSuite {
     val (dir, specInit, specNew) = writeFixtures()
     val out = dir.resolve("cube_rerun").toString
     BuildCube.build(spark, specInit.toString, dir.resolve("images").toString,
-      "/root/reference/config", out)
+      ccdConfig, out)
     val s1 = UpdateCube.update(spark, out, specNew.toString)
     assert(s1.newSpectra == 5 && s1.affectedTargets == 1)
     def snapshot() = Seq("spectra", "cutout_links", "ml_cube", "viz_cube")
@@ -131,7 +138,7 @@ class UpdateSpec extends AnyFunSuite {
       150.2, 2.1, 1002, 53100, 3, loglam, flux, ivar)
     val out = dir.resolve("cube_newtarget").toString
     BuildCube.build(spark, specA.toString, dir.resolve("images").toString,
-      "/root/reference/config", out)
+      ccdConfig, out)
     val targetsBefore = spark.read.parquet(s"$out/ml_cube")
       .select("target_healpix").distinct().count()
     assert(targetsBefore == 1)
@@ -149,7 +156,7 @@ class UpdateSpec extends AnyFunSuite {
     val (dir, specInit, specNew) = writeFixtures()
     val out = dir.resolve("cube_streamed").toString
     BuildCube.build(spark, specInit.toString, dir.resolve("images").toString,
-      "/root/reference/config", out)
+      ccdConfig, out)
     // before: target A is a 1-spectrum stack
     assert(spark.read.parquet(s"$out/ml_cube").where($"n_spectra" === 2).count() == 0)
     graft.streaming.ObservationStream.updateStream(spark, specNew.toString, out)

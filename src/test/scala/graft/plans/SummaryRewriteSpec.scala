@@ -1010,7 +1010,15 @@ class SummaryRewriteSpec extends AnyFunSuite {
   test("DSv2 fact: a summary over the FITS source's DataSourceV2Relation " +
       "serves the aggregate; the FITS scan disappears") {
     SummaryRewrite.install(spark)
-    val specDir = "/root/reference/data/raw/galaxy_small/spectra"
+    // synthetic spectra over two plates; the path ends in the fact suffix
+    val specDir = graft.TempDirs.create("dsv2-fact")
+      .resolve("galaxy_small").resolve("spectra").toString
+    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(specDir))
+    val (loglam, flux, ivar) = graft.pipeline.FitsFixtures.specGrid()
+    for ((plate, k) <- Seq(411, 411, 412, 412, 412).zipWithIndex)
+      graft.pipeline.FitsFixtures.writeSpectrum(
+        f"$specDir/spec-$plate%04d-${51800 + k}-${k + 1}%04d.fits",
+        46.55 + 0.01 * k, -0.34, plate, 51800 + k, k + 1, loglam, flux, ivar)
     def fits = spark.read
       .format("graft.sources.fits.FitsDataSource").load(specDir)
     val mvP = graft.TempDirs.create("mvspec")

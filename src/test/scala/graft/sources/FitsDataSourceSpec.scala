@@ -134,9 +134,16 @@ class FitsDataSourceSpec extends AnyFunSuite {
     d.toString
   }
 
+  // synthetic CCD gain/dark-variance tables; no assertion reads their values
+  private lazy val ccdConfig: String = {
+    val d = graft.TempDirs.create("dsv2-ccd").toString
+    graft.pipeline.FitsFixtures.writeCcdConfig(d)
+    d
+  }
+
   test("kind=images is row-identical to Ingest.images") {
     import spark.implicits._
-    val cfg = "/root/reference/config"
+    val cfg = ccdConfig
     def canon(df: org.apache.spark.sql.DataFrame) = df
       .select($"zoom", $"image_id", $"fits_name", $"band", $"wl", $"run",
         $"camcol", $"field", $"time", $"healpix", $"width", $"height",
@@ -155,7 +162,7 @@ class FitsDataSourceSpec extends AnyFunSuite {
 
   test("kind=images prunes pixel planes for metadata-only queries") {
     val df = spark.read.format(Fmt)
-      .option("kind", "images").option("ccdConfig", "/root/reference/config")
+      .option("kind", "images").option("ccdConfig", ccdConfig)
       .load(imgDir).select("band", "run", "zoom")
     val scan = df.queryExecution.executedPlan.toString
     val read = "cols=([^ \\n]*)".r.findFirstMatchIn(scan).map(_.group(1))
@@ -165,7 +172,7 @@ class FitsDataSourceSpec extends AnyFunSuite {
 
   test("run/camcol/field/band equalities prune the frame listing to fewer partitions") {
     import spark.implicits._
-    val cfg = "/root/reference/config"
+    val cfg = ccdConfig
     def read() = spark.read.format(Fmt)
       .option("kind", "images").option("ccdConfig", cfg).load(imgDir)
     // imgDir: frame-r-005200-3-0001 + frame-g-005201-3-0001
@@ -223,7 +230,7 @@ class FitsDataSourceSpec extends AnyFunSuite {
 
   test("runDirLayout skips sibling run subtrees at listing time") {
     import spark.implicits._
-    val cfg = "/root/reference/config"
+    val cfg = ccdConfig
     val root = graft.TempDirs.create("dsv2-rundirs")
     for (run <- Seq(5300, 5301, 5302)) {
       val rd = root.resolve(run.toString).resolve("3")
