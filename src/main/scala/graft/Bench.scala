@@ -112,7 +112,13 @@ object Bench {
     }._2)
     val spectra = pipeline.Ingest.spectra(spark, specDir.toString).cache()
     spectra.count()
-    val cfg = sys.env.getOrElse("SPARK_GRAFT_REF_CONFIG", "/root/reference/config")
+    // a synthetic CCD config next to the synthetic frames, unless a real
+    // one is named
+    val cfg = sys.env.getOrElse("SPARK_GRAFT_REF_CONFIG", {
+      val d = dir.resolve("ccd").toString
+      pipeline.FitsFixtures.writeCcdConfig(d)
+      d
+    })
     val tImgs = (1 to 3).map(_ => timed {
       pipeline.Ingest.images(spark, imgDir.toString, cfg).count()
     }._2)

@@ -205,38 +205,6 @@ object Healpix {
     r * 1.01
   }
 
-  /** Conservative max pixel circumradius per order (precomputed over the
-    * pixels of order ≤ 2 scaled; used for the recursive disc cover). */
-  private val maxRadCache = new java.util.concurrent.ConcurrentHashMap[Int, Double]()
-
-  def maxPixrad(order: Int): Double =
-    maxRadCache.computeIfAbsent(order, o => {
-      // max circumradius occurs at polar-cap corners; sample all pixels at
-      // low orders, else the polar faces' pixel columns at the poles
-      val probeOrder = math.min(o, 3)
-      var m = 0.0
-      var p = 0L
-      val np = nPix(probeOrder)
-      while (p < np) { m = math.max(m, pixCircumradius(probeOrder, p)); p += 1 }
-      if (o <= 3) m
-      else {
-        // refine: scan pixels along face 0's diagonal at the true order
-        // (polar corner pixels are the worst case) + keep low-order bound
-        var worst = 0.0
-        val ns = nside(o)
-        var k = 0L
-        val step = math.max(1L, ns / 64)
-        while (k < ns) {
-          val pixDiag = interleave(k, k) // face 0 diagonal
-          worst = math.max(worst, pixCircumradius(o, pixDiag))
-          val pixDiag2 = interleave(k, ns - 1 - k)
-          worst = math.max(worst, pixCircumradius(o, pixDiag2))
-          k += step
-        }
-        worst * 1.05
-      }
-    })
-
   /** All pixels at `order` whose area may intersect the disc of `radius`
     * (radians) around unit vector `center` — a conservative superset, like
     * healpy `query_disc(inclusive=True)` (reference usage

@@ -323,9 +323,6 @@ object SketchOps {
 
   // ------------------------------------------------------ persisted Bloom
 
-  /** Number of 64-bit words backing an `mBits`-bit Bloom filter. */
-  private def bloomWords(mBits: Long): Long = (mBits + 63) / 64
-
   /** The 128-bit hash pair a key reduces to BEFORE any shuffle: bloom
     * membership depends only on (h1, h2), so every downstream step —
     * the build's distinct, the probe's distinct, the pass-set join —

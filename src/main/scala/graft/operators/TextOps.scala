@@ -149,12 +149,6 @@ object TextOps {
         round($"inter" * lit(1.0) / (col("sa.n") + col("sb.n") - $"inter"), 4).as("jac"))
   }
 
-  /** MinHash signature: K independent hash "permutations", each the min
-    * of xxhash64(shingle, k) over the shingle set. */
-  def minhashSig(sh: Column, k: Int): Column =
-    transform(sequence(lit(0), lit(k - 1)),
-      kk => array_min(transform(sh, x => xxhash64(x, kk))))
-
   /** MinHash + LSH near-dup detection: signature → bands → bucket-join on
     * (band, band-hash) → exact Jaccard verify on candidates. Only
     * same-bucket pairs are materialized (the scale path: shuffle on

@@ -14,9 +14,6 @@ import graft.syntax._
   */
 object VectorOps {
 
-  /** Cast array<float> → array<double> so all downstream math is f64. */
-  def asDouble(c: Column): Column = transform(c, _.cast("double"))
-
   /** Element-wise |a-b| summed — the reference's `target_distance`
     * (nansum of abs diff of IVW vectors). Native codegen kernel
     * ([[graft.plans.ArrayL1Expr]]): a tight primitive loop inside

@@ -234,8 +234,9 @@ object WarehouseOps {
     * correction flow — a date-partitioned table gets ONE day's
     * partition rewritten with corrected rows while every other
     * partition's files are untouched (verified by listing, not
-    * trusted). `partitionOverwriteMode=dynamic` scopes the overwrite to
-    * partitions the corrected frame actually contains; static mode
+    * trusted). The `partitionOverwriteMode=dynamic` writer option (not
+    * the session conf, which concurrent writers share) scopes the
+    * overwrite to partitions the corrected frame actually contains; static mode
     * would truncate the whole table first — the difference between a
     * backfill and an outage.
     *
@@ -259,13 +260,8 @@ object WarehouseOps {
             f.getPath.getName + ":" + f.getLen).sorted)
         .toMap
     val before = otherParts()
-    val prev = s.conf.getOption("spark.sql.sources.partitionOverwriteMode")
-    s.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try corrected.write.mode("overwrite").partitionBy(partCol).parquet(table)
-    finally prev match {
-      case Some(v) => s.conf.set("spark.sql.sources.partitionOverwriteMode", v)
-      case None => s.conf.unset("spark.sql.sources.partitionOverwriteMode")
-    }
+    corrected.write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
+      .partitionBy(partCol).parquet(table)
     val after = otherParts()
     if (before != after)
       throw new IllegalStateException(

@@ -6,8 +6,10 @@ import org.apache.spark.sql.functions.{col, shiftright}
 /** Full cube construction — the analogue of `hisscube.py <in> <out>
   * create` (reference §3.1 builder list: metadata-cache → metadata →
   * data → link → visualization → ml-cube). In Spark the phases are five
-  * DataFrame jobs over one shared ingest; ordering is only
-  * data-dependency, not hand-scheduling.
+  * table writes over one shared, cached ingest (about 30 Spark jobs in
+  * all, counting the range-partition samples and AQE's stage jobs);
+  * ordering is only data-dependency, not hand-scheduling.
+  * Each write counts its own rows for the returned [[Summary]].
   *
   * Usage: BuildCube <spectraDir> <imagesDir> <ccdConfigDir> <outDir>
   *
@@ -28,38 +30,35 @@ object BuildCube {
       spectraDir: String, imagesDir: String, ccdConfigDir: String,
       outDir: String): Summary = {
 
+    // each input feeds its own write, the links, the ML stack and the viz
+    // flatten: cached, so each FITS file is decoded once
     val spectra = Ingest.spectra(spark, spectraDir).cache()
     val images = Ingest.images(spark, imagesDir, ccdConfigDir).cache()
 
-    Ingest.writeSorted(spectra, s"$outDir/spectra")
-    Ingest.writeSorted(images, s"$outDir/images")
+    val nSpectra = Ingest.writeSorted(spectra, s"$outDir/spectra")
+    val nImages = Ingest.writeSorted(images, s"$outDir/images")
 
+    // feeds its write, the ML stack and the viz flatten
     val links = Link.linkCutouts(spectra, images).cache()
-    links.toDF().write.mode(SaveMode.Overwrite)
-      .partitionBy("zoom").parquet(s"$outDir/cutout_links")
+    val nLinks = Ingest.writeCounted(links.toDF())(_.write.mode(SaveMode.Overwrite)
+      .partitionBy("zoom").parquet(s"$outDir/cutout_links"))
 
-    val ml = MlCube.build(spectra, links, images).cache()
     // (zoom, spatial-bucket) partitioning so the incremental update phase
     // (UpdateCube) can dynamic-overwrite only the buckets it re-stacks
-    ml.toDF()
-      .withColumn("bucket", shiftright(col("target_healpix"), UpdateCube.BucketShift))
-      .write.mode(SaveMode.Overwrite)
-      .partitionBy("zoom", "bucket").parquet(s"$outDir/ml_cube")
+    val nMl = Ingest.writeCounted(MlCube.build(spectra, links, images).toDF()
+      .withColumn("bucket", shiftright(col("target_healpix"), UpdateCube.BucketShift)))(
+      _.write.mode(SaveMode.Overwrite).partitionBy("zoom", "bucket").parquet(s"$outDir/ml_cube"))
 
+    // cached: the range partitioner's sampling job would otherwise run
+    // the viz flatten a second time
     val viz = VizCube.build(spectra, links, images).cache()
-    viz.toDF()
+    val nViz = Ingest.writeCounted(viz.toDF()
       .repartitionByRange(col("zoom"), col("heal_id"))
-      .sortWithinPartitions("zoom", "heal_id")
-      .write.mode(SaveMode.Overwrite)
-      .partitionBy("zoom").parquet(s"$outDir/viz_cube")
+      .sortWithinPartitions("zoom", "heal_id"))(
+      _.write.mode(SaveMode.Overwrite).partitionBy("zoom").parquet(s"$outDir/viz_cube"))
 
-    // counts from the cached datasets: an all-empty phase (e.g. zero
-    // spatial overlap) writes a schemaless empty dir that can't be re-read
-    val summary = Summary(
-      spectra.count(), images.count(), links.count(), ml.count(), viz.count())
-    Seq(spectra, images, links).foreach(_.unpersist())
-    ml.unpersist(); viz.unpersist()
-    summary
+    Seq(spectra, images, links, viz).foreach(_.unpersist())
+    Summary(nSpectra, nImages, nLinks, nMl, nViz)
   }
 
   /** V3 read path: one zoom level of the dense visualization cube —

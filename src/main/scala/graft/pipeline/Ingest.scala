@@ -212,16 +212,26 @@ object Ingest {
     path.fold(w)(p => w.option("path", p)).saveAsTable(table)
   }
 
+  /** Run `write` on `df` and return the number of rows it wrote: an
+    * `Observation` of `count(*)` that the write action itself collects,
+    * so the count needs no cache and no second action. `df` must be the
+    * frame exactly as it goes to the writer, ABOVE any
+    * `repartitionByRange`: the range partitioner's sampling job runs the
+    * subtree below its exchange too, so an observation there counts
+    * every row twice. An empty write reports 0. */
+  def writeCounted(df: DataFrame)(write: DataFrame => Unit): Long = {
+    val rows = org.apache.spark.sql.Observation()
+    write(df.observe(rows, count(lit(1)).as("rows")))
+    rows.get("rows").asInstanceOf[Long]
+  }
+
   /** Persist an observation table the way the 100 TB layout wants it:
     * partitioned by zoom, range-sorted by healpix within partitions so
-    * parquet row-group min/max stats prune spatial probes (I4). */
-  def writeSorted[T](ds: Dataset[T], outDir: String, numFiles: Int = 32): Unit = {
-    import org.apache.spark.sql.functions.col
-    ds.toDF()
+    * parquet row-group min/max stats prune spatial probes (I4). Returns
+    * the number of rows written. */
+  def writeSorted[T](ds: Dataset[T], outDir: String, numFiles: Int = 32): Long =
+    writeCounted(ds.toDF()
       .repartitionByRange(numFiles, col("zoom"), col("healpix"))
-      .sortWithinPartitions("zoom", "healpix")
-      .write.mode("overwrite")
-      .partitionBy("zoom")
-      .parquet(outDir)
-  }
+      .sortWithinPartitions("zoom", "healpix"))(
+      _.write.mode("overwrite").partitionBy("zoom").parquet(outDir))
 }

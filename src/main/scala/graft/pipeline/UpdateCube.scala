@@ -16,8 +16,13 @@ import org.apache.spark.sql.functions._
   *    buckets that contain them (dynamic partition overwrite on
   *    (zoom, bucket)); every other bucket's files are untouched.
   *
-  * At 100 TB this touches O(new data) + O(affected buckets), not the
-  * cube: an update of one plate re-reads a few order-3 supercells.
+  * Cost: the appends write O(new data), and the `ml_cube` rewrite reads
+  * and writes only the affected (zoom, bucket) partitions. The re-stack's
+  * inputs are not bounded that way: it scans all of `spectra`,
+  * `cutout_links` and `images` and filters them with a broadcast join on
+  * `healpix`, which is not a partition column, so that read grows with
+  * the whole cube. The missing-work probes add one single-column scan of
+  * each table's zoom=0 partition.
   */
 object UpdateCube {
 
@@ -54,6 +59,9 @@ object UpdateCube {
     // would vanish from the batch and the unfinished ML/viz steps would
     // be skipped forever.) Every probe is a pruned single-column read of
     // the zoom=0 partition.
+
+    // cached: every step below reads the batch, and decoding it is the
+    // expensive part of an update
     val incoming = newSpecsIn.cache()
     if (incoming.isEmpty) {
       incoming.unpersist()
@@ -64,13 +72,9 @@ object UpdateCube {
     // 1. spectra: append only observations not already present
     val existingSpecIds = spark.read.parquet(s"$outDir/spectra")
       .where(col("zoom") === 0).select(col("spec_id")).distinct()
-    val newSpecs = incoming.toDF()
-      .join(existingSpecIds, Seq("spec_id"), "left_anti")
-      .as[SpectrumObs].cache()
-    val nNewSpectra = newSpecs.count()
-    if (nNewSpectra > 0)
-      newSpecs.toDF().write.mode(SaveMode.Append)
-        .partitionBy("zoom").parquet(s"$outDir/spectra")
+    val nNewSpectra = Ingest.writeCounted(incoming.toDF()
+      .join(existingSpecIds, Seq("spec_id"), "left_anti"))(
+      _.write.mode(SaveMode.Append).partitionBy("zoom").parquet(s"$outDir/spectra"))
 
     // 2. links: link the incoming spectra that have no links yet (links
     // are per-spectrum → pure append)
@@ -79,11 +83,8 @@ object UpdateCube {
     val unlinked = incoming.toDF()
       .join(linkedIds, Seq("spec_id"), "left_anti")
       .as[SpectrumObs]
-    val newLinks = Link.linkCutouts(unlinked, images).cache()
-    val nNewLinks = newLinks.count()
-    if (nNewLinks > 0)
-      newLinks.toDF().write.mode(SaveMode.Append)
-        .partitionBy("zoom").parquet(s"$outDir/cutout_links")
+    val nNewLinks = Ingest.writeCounted(Link.linkCutouts(unlinked, images).toDF())(
+      _.write.mode(SaveMode.Append).partitionBy("zoom").parquet(s"$outDir/cutout_links"))
 
     // 3. affected targets: cells touched by the INCOMING batch whose
     // stored stack is STALE — stored n_spectra (zoom 0) differs from the
@@ -98,6 +99,8 @@ object UpdateCube {
     val stored = spark.read.parquet(s"$outDir/ml_cube")
       .where(col("zoom") === 0)
       .select(col("target_healpix"), col("n_spectra"))
+    // cached and counted: the count guards the re-stack, and the buckets,
+    // the re-stack's inputs and the surviving rows all reuse the set
     val affected = expected
       .join(stored, col("affected_healpix") === col("target_healpix"), "left")
       .filter(col("n_spectra").isNull || col("n_spectra") =!= col("expected_n"))
@@ -106,8 +109,7 @@ object UpdateCube {
 
     // 4.+5. re-stack stale targets from the UPDATED tables and rewrite
     // only their (zoom, bucket) partitions
-    var mlRowCount = 0L
-    if (nAffected > 0) {
+    val mlRowCount = if (nAffected == 0) 0L else {
       val affectedBuckets = affected
         .select(shiftright(col("affected_healpix"), BucketShift).as("bucket")).distinct()
       val affectedSpectra = allSpectra.toDF()
@@ -140,17 +142,11 @@ object UpdateCube {
         .localCheckpoint()
       require(!mlRewrite.queryExecution.executedPlan.toString.contains("ml_cube"),
         "ml_cube rewrite plan must not read the path being overwritten")
-      mlRowCount = mlRewrite.count()
-      val prevMode = spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
-      spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-      try
-        mlRewrite
-          .write.mode(SaveMode.Overwrite)
-          .partitionBy("zoom", "bucket").parquet(s"$outDir/ml_cube")
-      finally prevMode match {
-        case Some(m) => spark.conf.set("spark.sql.sources.partitionOverwriteMode", m)
-        case None => spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
-      }
+      // the writer option scopes the overwrite to the written (zoom,
+      // bucket) partitions without touching the session's conf
+      Ingest.writeCounted(mlRewrite)(
+        _.write.mode(SaveMode.Overwrite).option("partitionOverwriteMode", "dynamic")
+          .partitionBy("zoom", "bucket").parquet(s"$outDir/ml_cube"))
     }
 
     // 6. viz rows are per-observation → append, for incoming spectra
@@ -160,29 +156,23 @@ object UpdateCube {
       .where(col("zoom") === 0).select(col("fits_name").as("viz_name")).distinct()
     val vizSpecs = incoming.toDF()
       .join(vizNames, col("fits_name") === col("viz_name"), "left_anti")
-      .as[SpectrumObs].cache()
+      .as[SpectrumObs]
     val vizSpecIds = vizSpecs.toDF().where(col("zoom") === 0)
       .select(col("spec_id").as("v_spec_id")).distinct()
     val vizLinks = spark.read.parquet(s"$outDir/cutout_links")
       .join(broadcast(vizSpecIds), col("spec_id") === col("v_spec_id"))
       .drop("v_spec_id")
       .as[CutoutLink]
-    var vizCount = 0L
-    if (!vizSpecs.isEmpty) {
-      val vizNew = VizCube.build(vizSpecs, vizLinks, images).cache()
-      vizCount = vizNew.count()
-      vizNew.toDF()
-        .repartitionByRange(col("zoom"), col("heal_id"))
-        .sortWithinPartitions("zoom", "heal_id")
-        .write.mode(SaveMode.Append)
-        .partitionBy("zoom").parquet(s"$outDir/viz_cube")
-      vizNew.unpersist()
-    }
+    // cached: the range partitioner's sampling job would otherwise run
+    // the viz flatten a second time
+    val vizNew = VizCube.build(vizSpecs, vizLinks, images).cache()
+    val vizCount = Ingest.writeCounted(vizNew.toDF()
+      .repartitionByRange(col("zoom"), col("heal_id"))
+      .sortWithinPartitions("zoom", "heal_id"))(
+      _.write.mode(SaveMode.Append).partitionBy("zoom").parquet(s"$outDir/viz_cube"))
 
-    val summary = UpdateSummary(nNewSpectra, nNewLinks, nAffected, mlRowCount, vizCount)
-    incoming.unpersist(); newSpecs.unpersist(); newLinks.unpersist()
-    affected.unpersist(); vizSpecs.unpersist()
-    summary
+    Seq(incoming, affected, vizNew).foreach(_.unpersist())
+    UpdateSummary(nNewSpectra, nNewLinks, nAffected, mlRowCount, vizCount)
   }
 
   /** CLI parity with `hisscube.py <in> <out> update`:

@@ -219,16 +219,4 @@ object Fits {
     }
     out
   }
-
-  def readFloats(bytes: Array[Byte], t: BinTable, col: BinColumn, row: Int): Array[Float] = {
-    val d = readDoubles(bytes, t, col, row)
-    val out = new Array[Float](d.length)
-    var i = 0
-    while (i < d.length) { out(i) = d(i).toFloat; i += 1 }
-    out
-  }
-
-  /** Whole column over all rows (column-major gather). */
-  def readColumnDoubles(bytes: Array[Byte], t: BinTable, name: String): Array[Array[Double]] =
-    Array.tabulate(t.nRows)(r => readDoubles(bytes, t, t.column(name), r))
 }

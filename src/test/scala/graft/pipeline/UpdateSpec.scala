@@ -2,6 +2,8 @@ package graft.pipeline
 
 import java.nio.file.{Files, Path}
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -55,25 +57,12 @@ class UpdateSpec extends AnyFunSuite {
     (dir, specInit, specNew)
   }
 
-  test("update(one new spectrum) equals a from-scratch rebuild on every table") {
+  def tbl(out: String, name: String) = spark.read.parquet(s"$out/$name")
+
+  /** Every table of the cube at `outInc` equals the from-scratch rebuild
+    * at `outFull`. */
+  def assertSameAsRebuild(outInc: String, outFull: String): Unit = {
     import spark.implicits._
-    val (dir, specInit, specNew) = writeFixtures()
-    val cfg = ccdConfig
-    val outInc = dir.resolve("cube_incremental").toString
-    val outFull = dir.resolve("cube_full").toString
-
-    // incremental: build on the subset, then update with the new spectrum
-    BuildCube.build(spark, specInit.toString, dir.resolve("images").toString, cfg, outInc)
-    val s = UpdateCube.update(spark, outInc, specNew.toString)
-    assert(s.newSpectra == 5) // 1 spectrum × 5 zooms
-    assert(s.affectedTargets == 1) // only target A re-stacked
-    assert(s.newLinks == 25) // 5 bands × 5 zooms
-
-    // reference: one-shot build over the full input
-    BuildCube.build(spark, dir.resolve("spectra_all").toString,
-      dir.resolve("images").toString, cfg, outFull)
-
-    def tbl(out: String, name: String) = spark.read.parquet(s"$out/$name")
     // spectra + links: identical row multisets
     assert(tbl(outInc, "spectra").count() == tbl(outFull, "spectra").count())
     val linkCols = Seq("zoom", "spec_id", "image_id", "band", "x_min", "x_max", "y_min", "y_max")
@@ -106,6 +95,38 @@ class UpdateSpec extends AnyFunSuite {
     assert(vi == vf)
   }
 
+  test("update(one new spectrum) equals a from-scratch rebuild on every table") {
+    import spark.implicits._
+    val (dir, specInit, specNew) = writeFixtures()
+    val cfg = ccdConfig
+    val outInc = dir.resolve("cube_incremental").toString
+    val outFull = dir.resolve("cube_full").toString
+
+    // incremental: build on the subset, then update with the new spectrum
+    BuildCube.build(spark, specInit.toString, dir.resolve("images").toString, cfg, outInc)
+    val vizBefore = tbl(outInc, "viz_cube").count()
+    val overwriteMode = spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
+    val s = UpdateCube.update(spark, outInc, specNew.toString)
+    assert(s.newSpectra == 5) // 1 spectrum × 5 zooms
+    assert(s.affectedTargets == 1) // only target A re-stacked
+    assert(s.newLinks == 25) // 5 bands × 5 zooms
+    // the summary's row counts are the rows the update wrote
+    val vizGrowth = tbl(outInc, "viz_cube").count() - vizBefore
+    assert(vizGrowth > 0 && s.vizRowsAppended == vizGrowth, s"${s.vizRowsAppended} vs $vizGrowth")
+    val rewrittenBuckets = Ingest.spectra(spark, specNew.toString).where($"zoom" === 0)
+      .select(shiftright($"healpix", UpdateCube.BucketShift).as("bucket")).distinct()
+    val inRewritten = tbl(outInc, "ml_cube").join(rewrittenBuckets, "bucket").count()
+    assert(inRewritten > 0 && s.mlRowsRewritten == inRewritten, s"${s.mlRowsRewritten} vs $inRewritten")
+    // the dynamic overwrite leaves the session's conf as it found it
+    assert(spark.conf.getOption("spark.sql.sources.partitionOverwriteMode") == overwriteMode)
+
+    // reference: one-shot build over the full input
+    BuildCube.build(spark, dir.resolve("spectra_all").toString,
+      dir.resolve("images").toString, cfg, outFull)
+
+    assertSameAsRebuild(outInc, outFull)
+  }
+
   test("re-running a completed update is a no-op (convergent retry)") {
     import spark.implicits._
     val (dir, specInit, specNew) = writeFixtures()
@@ -123,6 +144,46 @@ class UpdateSpec extends AnyFunSuite {
     assert(snapshot() == before)
     // ml stacks unchanged: target A still a 2-spectrum stack at all zooms
     assert(spark.read.parquet(s"$out/ml_cube").where($"n_spectra" === 2).count() == 5)
+  }
+
+  /** Copy the directory tree at `from` to `to`. */
+  def copyTree(from: Path, to: Path): Unit =
+    Files.walk(from).iterator().asScala.foreach { f =>
+      val t = to.resolve(from.relativize(f).toString)
+      if (Files.isDirectory(f)) Files.createDirectories(t) else Files.copy(f, t)
+    }
+
+  test("a crash after any of the first three writes converges to the rebuild on retry") {
+    val (dir, specInit, specNew) = writeFixtures()
+    val images = dir.resolve("images").toString
+    val pre = dir.resolve("cube_pre")
+    BuildCube.build(spark, specInit.toString, images, ccdConfig, pre.toString)
+    val post = dir.resolve("cube_post")
+    copyTree(pre, post)
+    val full = UpdateCube.update(spark, post.toString, specNew.toString)
+    val outFull = dir.resolve("cube_full").toString
+    BuildCube.build(spark, dir.resolve("spectra_all").toString, images, ccdConfig, outFull)
+    // the update's writes in order: spectra, links, ml_cube, then viz.
+    // The state after a crash following write k is the pre-update cube
+    // with the first k tables as the completed update left them. (A crash
+    // inside the ml_cube dynamic overwrite is not modelled.)
+    val order = Seq("spectra", "cutout_links", "ml_cube")
+    for (k <- 1 to 3) {
+      val crashed = dir.resolve(s"cube_crash_$k")
+      copyTree(pre, crashed)
+      order.take(k).foreach { t =>
+        Files.walk(crashed.resolve(t)).iterator().asScala.toSeq.reverse.foreach(Files.delete)
+        copyTree(post.resolve(t), crashed.resolve(t))
+      }
+      val s = UpdateCube.update(spark, crashed.toString, specNew.toString)
+      // the retry does exactly the writes the crash left undone
+      assert(s == UpdateCube.UpdateSummary(0,
+        if (k >= 2) 0 else full.newLinks,
+        if (k >= 3) 0 else full.affectedTargets,
+        if (k >= 3) 0 else full.mlRowsRewritten,
+        full.vizRowsAppended), s"k=$k: $s vs $full")
+      assertSameAsRebuild(crashed.toString, outFull)
+    }
   }
 
   test("update with a spectrum of a NEW target creates its ML rows in place") {
