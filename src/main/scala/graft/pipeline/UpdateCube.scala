@@ -1,7 +1,10 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{Dataset, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+
+import graft.functions.Healpix
+import graft.operators.TextOps
 
 /** Incremental update — the analogue of `hisscube.py update`
   * (`hisscube.py:18-80`, `builders_parallel.py`): bring NEW spectra into
@@ -16,13 +19,22 @@ import org.apache.spark.sql.functions._
   *    buckets that contain them (dynamic partition overwrite on
   *    (zoom, bucket)); every other bucket's files are untouched.
   *
-  * Cost: the appends write O(new data), and the `ml_cube` rewrite reads
-  * and writes only the affected (zoom, bucket) partitions. The re-stack's
-  * inputs are not bounded that way: it scans all of `spectra`,
-  * `cutout_links` and `images` and filters them with a broadcast join on
-  * `healpix`, which is not a partition column, so that read grows with
-  * the whole cube. The missing-work probes add one single-column scan of
-  * each table's zoom=0 partition.
+  * Plan shape: the control sets — which incoming ids each table lacks,
+  * which targets are stale, their buckets and spectrum ids — come from
+  * two collected actions (the batch's zoom-0 keys; one tagged-union probe
+  * of the four tables) and reach every later plan as literal `IN`
+  * predicates, not broadcast joins. QUANTIFIED BOUND: ids, names, targets
+  * and order-19 cells ≤ #batch spectra each; spectrum ids of stale
+  * targets ≤ repeats × stale targets — ≈ 50 B per batch spectrum, under
+  * 1 MB of literals per plan at 10k spectra; feed larger inputs as
+  * smaller batches (as the streaming entry does).
+  *
+  * Cost: the appends write O(new data); the `ml_cube` rewrite reads and
+  * writes only the affected (zoom, bucket) partitions. Batch-bounded
+  * reads: `ml_cube` (bucket partitions), `spectra` and the `viz_cube`
+  * probe (row groups of their healpix / heal_id sort). Unbounded:
+  * `cutout_links` (unsorted by `spec_id`: its filter drops rows, not
+  * files) and `images`, read in full by the link, re-stack and viz steps.
   */
 object UpdateCube {
 
@@ -48,131 +60,118 @@ object UpdateCube {
       newSpecsIn: Dataset[SpectrumObs]): UpdateSummary = {
     import spark.implicits._
 
-    // CONVERGENT RETRY DESIGN: the multi-step sequence (append spectra →
-    // append links → overwrite ML buckets → append viz) is not atomic,
-    // and a transactional table format is out of scope — so instead each
-    // table derives its own missing-work set from the INCOMING batch.
-    // Re-running the same update after a failure at ANY step completes
-    // exactly the remaining steps; re-running a completed update is a
-    // no-op. (A single up-front "new spectra" filter would do the
-    // opposite: after a mid-sequence failure the already-appended spectra
-    // would vanish from the batch and the unfinished ML/viz steps would
-    // be skipped forever.) Every probe is a pruned single-column read of
-    // the zoom=0 partition.
+    // CONVERGENT RETRY DESIGN: the sequence (append spectra → append
+    // links → overwrite ML buckets → append viz) is not atomic and a
+    // transactional table format is out of scope, so each table derives
+    // its own missing-work set from the INCOMING batch (not one "new
+    // spectra" filter, which would skip unfinished ML/viz steps forever):
+    // a retry after a failure at ANY step completes exactly the remaining
+    // steps, and a rerun of a completed update is a no-op. Each table is
+    // written only by its own step, so one probe at the start sees each
+    // table as it is before its step.
 
     // cached: every step below reads the batch, and decoding it is the
-    // expensive part of an update
+    // expensive part of an update. Action 1, the batch's keys, fills it.
     val incoming = newSpecsIn.cache()
-    if (incoming.isEmpty) {
-      incoming.unpersist()
-      return UpdateSummary(0, 0, 0, 0, 0)
-    }
-    val images = spark.read.parquet(s"$outDir/images").as[ImageObs]
+    val batch = incoming.toDF().where(col("zoom") === 0)
+      .select("spec_id", "fits_name", "healpix", "ra", "dec")
+      .as[(Long, String, Long, Double, Double)].collect()
+    if (batch.isEmpty) { incoming.unpersist(); return UpdateSummary(0, 0, 0, 0, 0) }
+    val targets = batch.map(_._3).distinct
+    def buckets(ts: Iterable[Long]) = ts.map(t => (t >> BucketShift).toInt).toSeq
+    // a schema given up front (the model's case class; partition columns
+    // are discovered) spares each read the job that infers it from a footer
+    def read[T: Encoder](table: String) =
+      spark.read.schema(implicitly[Encoder[T]].schema).parquet(s"$outDir/$table")
+    val images = read[ImageObs]("images").as[ImageObs]
+    val ml = read[MlCubeRow]("ml_cube") // one listing for the probe and the survivors
+
+    // Action 2: ONE tagged union (the q280 idiom) answers each table's
+    // missing-work question, pruned by the batch's keys; a spectrum's viz
+    // samples sit in its own order-19 cell (row groups of the heal_id sort)
+    val cells = batch.map(b => Healpix.ang2pixLonLat(VizCube.OutputHealOrder, b._4, b._5))
+    val probe = Seq(
+      read[SpectrumObs]("spectra").where(col("zoom") === 0 && col("healpix").isin(targets: _*))
+        .selectExpr("'spectra' t", "spec_id key", "healpix n", "null name"),
+      read[CutoutLink]("cutout_links")
+        .where(col("zoom") === 0 && col("spec_id").isin(batch.map(_._1): _*))
+        .selectExpr("'links'", "spec_id", "null", "null"),
+      read[VizRow]("viz_cube").where(col("zoom") === 0 && col("heal_id").isin(cells: _*) &&
+        col("fits_name").isin(batch.map(_._2): _*))
+        .selectExpr("'viz'", "null", "null", "fits_name"),
+      ml.where(col("zoom") === 0 && col("bucket").isin(buckets(targets): _*) &&
+        col("target_healpix").isin(targets: _*))
+        .selectExpr("'ml'", "target_healpix", "n_spectra", "null")
+    ).reduce(_ union _).groupBy("t", "key", "n", "name").count()
+      .as[(String, Option[Long], Option[Long], Option[String], Long)].collect()
+      .groupBy(_._1).withDefaultValue(Array.empty)
+    val stored = probe("spectra").map(p => (p._2.get, p._3.get, p._5)) // (id, target, rows)
+    val linked = probe("links").flatMap(_._2).toSet
+    val inViz = probe("viz").flatMap(_._4).toSet
+    val mlN = probe("ml").map(p => p._2.get -> p._3.get).toMap // one row per target
+
+    // 3. stale targets: no stack yet, or a stored n_spectra other than the
+    // zoom-0 rows the spectra table holds after step 1 (stored + missing
+    // incoming). A completed update re-runs as a no-op.
+    val storedIds = stored.map(_._1).toSet
+    val newRows = batch.filterNot(b => storedIds(b._1))
+    val after = stored ++ newRows.map(b => (b._1, b._3, 1L))
+    val expected = after.groupMapReduce(_._2)(_._3)(_ + _)
+    val stale = targets.filter(t => !mlN.get(t).contains(expected(t))).toSet
+
+    def append(df: DataFrame, table: String): Long = Ingest.writeCounted(df)(
+      _.write.mode(SaveMode.Append).partitionBy("zoom").parquet(s"$outDir/$table"))
+    def ofIds(ds: Dataset[_], ids: Seq[Long]) = ds.toDF().where(col("spec_id").isin(ids: _*))
 
     // 1. spectra: append only observations not already present
-    val existingSpecIds = spark.read.parquet(s"$outDir/spectra")
-      .where(col("zoom") === 0).select(col("spec_id")).distinct()
-    val nNewSpectra = Ingest.writeCounted(incoming.toDF()
-      .join(existingSpecIds, Seq("spec_id"), "left_anti"))(
-      _.write.mode(SaveMode.Append).partitionBy("zoom").parquet(s"$outDir/spectra"))
+    val nNewSpectra = if (newRows.isEmpty) 0L
+      else append(ofIds(incoming, newRows.map(_._1)), "spectra")
 
-    // 2. links: link the incoming spectra that have no links yet (links
-    // are per-spectrum → pure append)
-    val linkedIds = spark.read.parquet(s"$outDir/cutout_links")
-      .where(col("zoom") === 0).select(col("spec_id")).distinct()
-    val unlinked = incoming.toDF()
-      .join(linkedIds, Seq("spec_id"), "left_anti")
-      .as[SpectrumObs]
-    val nNewLinks = Ingest.writeCounted(Link.linkCutouts(unlinked, images).toDF())(
-      _.write.mode(SaveMode.Append).partitionBy("zoom").parquet(s"$outDir/cutout_links"))
+    // 2. links: link incoming spectra that have none yet (per-spectrum → append)
+    val unlinked = batch.map(_._1).filterNot(linked)
+    val nNewLinks = if (unlinked.isEmpty) 0L else append(Link.linkCutouts(
+      ofIds(incoming, unlinked).as[SpectrumObs], images).toDF(), "cutout_links")
+    val links = read[CutoutLink]("cutout_links") // after step 2; the re-stack and viz share it
 
-    // 3. affected targets: cells touched by the INCOMING batch whose
-    // stored stack is STALE — stored n_spectra (zoom 0) differs from the
-    // spectra-table count (or the target has no stack yet). A completed
-    // update re-runs as a no-op; a half-applied one converges.
-    val touched = incoming.toDF().where(col("zoom") === 0)
-      .select(col("healpix").as("affected_healpix")).distinct()
-    val allSpectra = spark.read.parquet(s"$outDir/spectra").as[SpectrumObs]
-    val expected = allSpectra.toDF().where(col("zoom") === 0)
-      .join(broadcast(touched), col("healpix") === col("affected_healpix"))
-      .groupBy(col("affected_healpix")).agg(count(lit(1)).as("expected_n"))
-    val stored = spark.read.parquet(s"$outDir/ml_cube")
-      .where(col("zoom") === 0)
-      .select(col("target_healpix"), col("n_spectra"))
-    // cached and counted: the count guards the re-stack, and the buckets,
-    // the re-stack's inputs and the surviving rows all reuse the set
-    val affected = expected
-      .join(stored, col("affected_healpix") === col("target_healpix"), "left")
-      .filter(col("n_spectra").isNull || col("n_spectra") =!= col("expected_n"))
-      .select(col("affected_healpix")).cache()
-    val nAffected = affected.count()
-
-    // 4.+5. re-stack stale targets from the UPDATED tables and rewrite
-    // only their (zoom, bucket) partitions
-    val mlRowCount = if (nAffected == 0) 0L else {
-      val affectedBuckets = affected
-        .select(shiftright(col("affected_healpix"), BucketShift).as("bucket")).distinct()
-      val affectedSpectra = allSpectra.toDF()
-        .join(broadcast(affected), col("healpix") === col("affected_healpix"))
-        .drop("affected_healpix")
-        .as[SpectrumObs]
-      val affectedSpecIds = affectedSpectra.toDF().where(col("zoom") === 0)
-        .select(col("spec_id").as("a_spec_id")).distinct()
-      val allLinks = spark.read.parquet(s"$outDir/cutout_links").as[CutoutLink]
-      val affectedLinks = allLinks.toDF()
-        .join(broadcast(affectedSpecIds), col("spec_id") === col("a_spec_id"))
-        .drop("a_spec_id")
-        .as[CutoutLink]
-      val mlNew = MlCube.build(affectedSpectra, affectedLinks, images)
-
-      // surviving rows of the affected buckets (unaffected targets) +
-      // the re-stacked rows
-      val oldMl = spark.read.parquet(s"$outDir/ml_cube")
-        .join(broadcast(affectedBuckets), Seq("bucket"), "left_semi")
-        .join(broadcast(affected),
-          col("target_healpix") === col("affected_healpix"), "left_anti")
-      // materialization BARRIER: the dynamic overwrite below deletes
-      // partition files this plan reads, so the union is pinned with
-      // localCheckpoint — the write job's plan becomes a scan of already-
-      // materialized blocks with its file lineage cut. (cache() was not a
-      // barrier: an evicted block would recompute mid-write and re-read
-      // files the overwrite is deleting.)
-      val mlRewrite = oldMl.unionByName(
+    // 4.+5. re-stack stale targets from the UPDATED tables; rewrite their (zoom, bucket)s
+    val mlRowCount = if (stale.isEmpty) 0L else {
+      val mlNew = MlCube.build(
+        read[SpectrumObs]("spectra").where(col("healpix").isin(stale.toSeq: _*)).as[SpectrumObs],
+        ofIds(links, after.filter(a => stale.contains(a._2)).map(_._1)).as[CutoutLink], images)
+      // the affected buckets' surviving rows (unaffected targets) + the re-stacked rows
+      val survivors = ml.where(col("bucket").isin(buckets(stale): _*) &&
+        !col("target_healpix").isin(stale.toSeq: _*))
+      // materialization BARRIER: the dynamic overwrite deletes partition
+      // files this plan reads, so the union is pinned with localCheckpoint
+      // and the write scans materialized blocks, its file lineage cut.
+      // (cache() is no barrier: an evicted block would recompute mid-write
+      // from files the overwrite is deleting.)
+      val mlRewrite = survivors.unionByName(
         mlNew.toDF().withColumn("bucket", shiftright(col("target_healpix"), BucketShift)))
         .localCheckpoint()
       require(!mlRewrite.queryExecution.executedPlan.toString.contains("ml_cube"),
         "ml_cube rewrite plan must not read the path being overwritten")
-      // the writer option scopes the overwrite to the written (zoom,
-      // bucket) partitions without touching the session's conf
-      Ingest.writeCounted(mlRewrite)(
+      // the writer option scopes the overwrite without touching the session's conf
+      try Ingest.writeCounted(mlRewrite)(
         _.write.mode(SaveMode.Overwrite).option("partitionOverwriteMode", "dynamic")
           .partitionBy("zoom", "bucket").parquet(s"$outDir/ml_cube"))
+      finally TextOps.releaseLocalCheckpoint(mlRewrite)
     }
 
-    // 6. viz rows are per-observation → append, for incoming spectra
-    // whose samples are not in the viz cube yet (their cutout-pixel rows
-    // ride along, rebuilt from the links table — which step 2 completed)
-    val vizNames = spark.read.parquet(s"$outDir/viz_cube")
-      .where(col("zoom") === 0).select(col("fits_name").as("viz_name")).distinct()
-    val vizSpecs = incoming.toDF()
-      .join(vizNames, col("fits_name") === col("viz_name"), "left_anti")
-      .as[SpectrumObs]
-    val vizSpecIds = vizSpecs.toDF().where(col("zoom") === 0)
-      .select(col("spec_id").as("v_spec_id")).distinct()
-    val vizLinks = spark.read.parquet(s"$outDir/cutout_links")
-      .join(broadcast(vizSpecIds), col("spec_id") === col("v_spec_id"))
-      .drop("v_spec_id")
-      .as[CutoutLink]
-    // cached: the range partitioner's sampling job would otherwise run
-    // the viz flatten a second time
-    val vizNew = VizCube.build(vizSpecs, vizLinks, images).cache()
-    val vizCount = Ingest.writeCounted(vizNew.toDF()
-      .repartitionByRange(col("zoom"), col("heal_id"))
-      .sortWithinPartitions("zoom", "heal_id"))(
-      _.write.mode(SaveMode.Append).partitionBy("zoom").parquet(s"$outDir/viz_cube"))
+    // 6. viz rows are per-observation → append, for incoming spectra not in
+    // the viz cube yet (cutout-pixel rows ride along, from step 2's links)
+    val vizSpecs = batch.filterNot(b => inViz(b._2))
+    val vizCount = if (vizSpecs.isEmpty) 0L else {
+      // cached: the range partitioner's sample would otherwise rerun the flatten
+      val vizNew = VizCube.build(ofIds(incoming, vizSpecs.map(_._1)).as[SpectrumObs],
+        ofIds(links, vizSpecs.map(_._1)).as[CutoutLink], images).cache()
+      try append(vizNew.toDF().repartitionByRange(col("zoom"), col("heal_id"))
+        .sortWithinPartitions("zoom", "heal_id"), "viz_cube")
+      finally vizNew.unpersist()
+    }
 
-    Seq(incoming, affected, vizNew).foreach(_.unpersist())
-    UpdateSummary(nNewSpectra, nNewLinks, nAffected, mlRowCount, vizCount)
+    incoming.unpersist()
+    UpdateSummary(nNewSpectra, nNewLinks, stale.size, mlRowCount, vizCount)
   }
 
   /** CLI parity with `hisscube.py <in> <out> update`:

@@ -1,11 +1,21 @@
 package graft.pipeline
 
 import java.nio.file.{Files, Path}
+import java.util.concurrent.ConcurrentLinkedQueue
+import java.util.concurrent.atomic.AtomicInteger
 
 import scala.jdk.CollectionConverters._
 
+import org.apache.spark.ListenerBusDrain
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.expressions.{Attribute, DynamicPruning, EqualTo, Expression, In, InSet, Literal}
+import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, ReusedExchangeExec}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Incremental update parity (`hisscube.py update` semantics): build a
@@ -225,5 +235,120 @@ class UpdateSpec extends AnyFunSuite {
     assert(spark.read.parquet(s"$out/ml_cube").where($"n_spectra" === 2).count() == 5)
     assert(spark.read.parquet(s"$out/spectra").count() == 3 * 5)
     assert(spark.read.parquet(s"$out/cutout_links").count() == 3 * 25)
+  }
+
+  /** Spark jobs one `UpdateCube.update` may run on the one-new-spectrum
+    * fixture (local[8], 8 shuffle partitions): the count measured with
+    * the control sets collected up front. Job count, not bytes, is
+    * what an update of this size pays for, so a rise here is a new
+    * per-step action or exchange. */
+  val UpdateJobCeiling = 25
+
+  /** Every physical node of `p`, through adaptive plans, query stages,
+    * reused exchanges, subqueries and cached relations. */
+  def nodes(p: SparkPlan): Seq[SparkPlan] = p +: (p match {
+    case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
+    case q: QueryStageExec => nodes(q.plan)
+    case r: ReusedExchangeExec => nodes(r.child)
+    case m: InMemoryTableScanExec => nodes(m.relation.cachedPlan)
+    case o => (o.children ++ o.subqueries).flatMap(nodes)
+  })
+
+  def scansOf(p: SparkPlan, table: String): Seq[FileSourceScanExec] = nodes(p).collect {
+    case f: FileSourceScanExec if f.relation.location.rootPaths.exists(_.getName == table) => f
+  }
+
+  /** A filter that bounds a scan by literal keys: `IN`, `InSet` or `=`
+    * against literals, on a column other than `zoom`, with no dynamic
+    * pruning subquery in it. */
+  def literalKeyFilter(e: Expression): Boolean =
+    !e.exists(_.isInstanceOf[DynamicPruning]) && (e match {
+      case In(a: Attribute, list) => a.name != "zoom" && list.forall(_.foldable)
+      case InSet(a: Attribute, _) => a.name != "zoom"
+      case EqualTo(a: Attribute, _: Literal) => a.name != "zoom"
+      case _ => false
+    })
+
+  test("update stays within its job budget, prunes ml_cube by bucket, broadcasts no unbounded table") {
+    val (dir, specInit, specNew) = writeFixtures()
+    val out = dir.resolve("cube_budget").toString
+    BuildCube.build(spark, specInit.toString, dir.resolve("images").toString, ccdConfig, out)
+    ListenerBusDrain(spark.sparkContext)
+    val jobs = new AtomicInteger(0)
+    val jobCounter = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit = { jobs.incrementAndGet(); () }
+    }
+    val plans = new ConcurrentLinkedQueue[(String, SparkPlan)]()
+    val planCollector = new QueryExecutionListener {
+      def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit = {
+        plans.add(funcName -> qe.executedPlan); ()
+      }
+      def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.sparkContext.addSparkListener(jobCounter)
+    spark.listenerManager.register(planCollector)
+    val s = try UpdateCube.update(spark, out, specNew.toString) finally {
+      ListenerBusDrain(spark.sparkContext)
+      spark.sparkContext.removeSparkListener(jobCounter)
+      spark.listenerManager.unregister(planCollector)
+    }
+    assert(s.newSpectra == 5 && s.affectedTargets == 1)
+    assert(jobs.get() <= UpdateJobCeiling, s"update ran ${jobs.get()} jobs")
+
+    // the rows surviving the ml_cube rewrite are read from literal buckets
+    val executed = plans.asScala.toSeq
+    val rewriteScans = executed.filter(_._1 == "localCheckpoint").flatMap(p => scansOf(p._2, "ml_cube"))
+    assert(rewriteScans.nonEmpty, executed.map(_._1).mkString(", "))
+    rewriteScans.foreach { f =>
+      assert(f.partitionFilters.exists(e => literalKeyFilter(e) && e.references.exists(_.name == "bucket")),
+        s"ml_cube rewrite scan without a literal bucket filter: ${f.partitionFilters}")
+    }
+    // every table scan on a broadcast build side is bounded by literal keys
+    for {
+      (name, p) <- executed
+      b <- nodes(p).collect { case b: BroadcastExchangeExec => b }
+      t <- Seq("spectra", "cutout_links", "ml_cube")
+      f <- scansOf(b, t)
+    } assert((f.dataFilters ++ f.partitionFilters).exists(literalKeyFilter),
+      s"$name broadcasts an unbounded $t scan: ${f.dataFilters ++ f.partitionFilters}")
+  }
+
+  test("a batch mixing an applied and a new spectrum appends and re-stacks only the new one") {
+    import spark.implicits._
+    val (dir, specInit, specNew) = writeFixtures()
+    val images = dir.resolve("images").toString
+    // target C: a new order-15 cell inside target B's frames
+    val (loglam, flux, ivar) = FitsFixtures.specGrid()
+    val (raC, decC) = (150.2 + 30.0 / 3600, 2.1)
+    assert(graft.functions.Healpix.ang2pixLonLat(Ingest.SpecHealOrder, raC, decC) !=
+      graft.functions.Healpix.ang2pixLonLat(Ingest.SpecHealOrder, 150.2, 2.1))
+    val specMixed = dir.resolve("spectra_mixed"); Files.createDirectories(specMixed)
+    copyTree(specNew, specMixed)
+    Seq(dir.resolve("spectra_all"), specMixed).foreach(d => FitsFixtures.writeSpectrum(
+      d.resolve("spec-1003-53200-0004.fits").toString, raC, decC, 1003, 53200, 4, loglam, flux, ivar))
+
+    val out = dir.resolve("cube_mixed").toString
+    BuildCube.build(spark, specInit.toString, images, ccdConfig, out)
+    UpdateCube.update(spark, out, specNew.toString)
+    def counts() = Seq("spectra", "cutout_links", "viz_cube")
+      .map(t => t -> tbl(out, t).count()).toMap
+    // viz sample rows per spectrum (a cutout row carries its frame's name)
+    def specVizRows() = tbl(out, "viz_cube").where($"fits_name".startsWith("spec-"))
+      .groupBy("fits_name").count().as[(String, Long)].collect().toMap
+    val (before, vizBefore) = (counts(), specVizRows())
+    val s = UpdateCube.update(spark, out, specMixed.toString)
+    assert(s.newSpectra == 5 && s.newLinks == 25 && s.affectedTargets == 1, s.toString)
+    // only the new spectrum's rows, links and viz rows were appended
+    val (after, vizAfter) = (counts(), specVizRows())
+    assert(after("spectra") - before("spectra") == 5)
+    assert(after("cutout_links") - before("cutout_links") == 25)
+    assert(after("viz_cube") - before("viz_cube") == s.vizRowsAppended)
+    val newName = "spec-1003-53200-0004.fits"
+    assert(vizAfter.getOrElse(newName, 0L) > 0 && vizAfter - newName == vizBefore,
+      s"$vizBefore -> $vizAfter")
+
+    val outFull = dir.resolve("cube_full").toString
+    BuildCube.build(spark, dir.resolve("spectra_all").toString, images, ccdConfig, outFull)
+    assertSameAsRebuild(out, outFull)
   }
 }
