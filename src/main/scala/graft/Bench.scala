@@ -60,12 +60,13 @@ object Bench {
     ms
   }
 
-  /** Fixture-backed build throughput (the BuildBench/IngestBench phases,
-    * sized to stay a small fraction of the query suite's wall time). */
+  /** Fixture-backed build throughput per phase (spectra and image
+    * ingest, link, ML stack, viz flatten), sized to stay a small
+    * fraction of the query suite's wall time. */
   private def buildMetrics(spark: SparkSession): String = {
     import java.nio.file.Files
     // 400 spectra / 100 frames: enough files to amortize fixed job
-    // overhead out of the per-file rates (matches IngestBench's scale)
+    // overhead out of the per-file rates
     val nTargets = 20
     val perTarget = 20
     val dir = TempDirs.create("bench-build")

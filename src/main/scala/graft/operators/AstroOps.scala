@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables.load
-import graft.pipeline.{Ingest, Link, MlCube, VizCube}
+import graft.pipeline.{Ingest, VizCube}
 import graft.plans.HealpixExpressions.{healpix_cell, healpix_disc}
 import graft.syntax._
 

@@ -920,7 +920,6 @@ object CurationOps {
     * cache is left untouched. */
   def trainLogistic(feats: DataFrame, xCols: Seq[String], yCol: String,
       iters: Int, lr: Double): Array[Long] = {
-    import org.apache.spark.sql.functions._
     val tookCache =
       feats.storageLevel == org.apache.spark.storage.StorageLevel.NONE
     if (tookCache) feats.persist()

@@ -121,7 +121,6 @@ object MultimodalOps {
     * text's character-code sum) — all recomputable by the SQL oracle, so
     * the PNG encode→decode roundtrip itself is hash-gated. */
   def q29Multimodal(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
     val feats = featurize(mediaTable(s, dir))
     feats.join(load(s, dir, "documents"), "doc_id")
       .groupBy(col("source"))
@@ -454,7 +453,6 @@ object MultimodalOps {
     * and explode — the video-frame-sample plumbing (byte-slicing layer;
     * content-agnostic by design). */
   def q32FrameSample(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
     val frameSize = 64
     load(s, dir, "documents")
       .select(

@@ -85,7 +85,6 @@ object WarehouseOps {
     * plus min/max stay exact. The profile output is #columns rows
     * either way. */
   def profileTable(df: DataFrame, approx: Boolean = false): DataFrame = {
-    val s = df.sparkSession
     val cols = df.schema.fields
     def nd(c: org.apache.spark.sql.Column) =
       if (approx) approx_count_distinct(c) else count_distinct(c)

@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, Encoder, SaveMode, SparkSession}
 import org.apache.spark.sql.functions.{col, shiftright}
 
 /** Full cube construction — the analogue of `hisscube.py <in> <out>
@@ -61,11 +61,21 @@ object BuildCube {
     Summary(nSpectra, nImages, nLinks, nMl, nViz)
   }
 
+  /** One cube table read with its model case class `T` as the schema.
+    * Partition columns are still discovered from the directories and
+    * come last, as in an inferred read, and no job has to infer the
+    * schema from a parquet footer. */
+  private[pipeline] def readTable[T: Encoder](
+      spark: SparkSession, outDir: String, table: String): DataFrame =
+    spark.read.schema(implicitly[Encoder[T]].schema).parquet(s"$outDir/$table")
+
   /** V3 read path: one zoom level of the dense visualization cube —
     * partition-pruned by the `zoom=` directory, row-group-pruned on
     * heal_id ranges. */
-  def readVizAtZoom(spark: SparkSession, outDir: String, zoom: Int) =
-    spark.read.parquet(s"$outDir/viz_cube").where(col("zoom") === zoom)
+  def readVizAtZoom(spark: SparkSession, outDir: String, zoom: Int) = {
+    import spark.implicits._
+    readTable[VizRow](spark, outDir, "viz_cube").where(col("zoom") === zoom)
+  }
 
   /** §3.3 ML read path — `MLProcessor.get_spectrum_3d_cube(conn, zoom)`
     * parity (`cube_ml.py:11-12`, `tests/test_export.py:94-99`): one zoom
@@ -74,7 +84,8 @@ object BuildCube {
     * row per target, partition-pruned by the `zoom=` directory. */
   def readMlAtZoom(spark: SparkSession, outDir: String, zoom: Int) = {
     import org.apache.spark.sql.functions.transform
-    spark.read.parquet(s"$outDir/ml_cube").where(col("zoom") === zoom)
+    import spark.implicits._
+    readTable[MlCubeRow](spark, outDir, "ml_cube").where(col("zoom") === zoom)
       .select(col("target_healpix"),
         transform(col("cutouts"), c => c.getField("flux")).as("image_cube"),
         transform(col("cutouts"), c => c.getField("sigma")).as("image_errors"),

@@ -41,8 +41,9 @@ object Ingest {
   def baseName(path: String): String = path.substring(path.lastIndexOf('/') + 1)
 
   /** Spectrum decode + X1 pyramid fan-out over an already-selected file
-    * table (path, content). */
-  private def decodeSpectra(
+    * table (path, content); the batch scan and `ObservationStream`
+    * share it. */
+  private[graft] def decodeSpectra(
       files: Dataset[(String, Array[Byte])], zoomCnt: Int): Dataset[SpectrumObs] = {
     import files.sparkSession.implicits._
     files.flatMap { case (path, bytes) =>

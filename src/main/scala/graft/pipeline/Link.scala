@@ -1,10 +1,10 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.functions.{Healpix, Wcs}
+import graft.functions.Wcs
 
 /** J1 — the spectra ⟕ image-cutouts spatial join (the reference's "link"
   * phase, `metadata_strategy_spectrum.py:440-477,569-734`).

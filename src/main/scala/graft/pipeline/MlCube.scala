@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 
 import graft.functions.IvwStackAggregator

@@ -1,8 +1,6 @@
 package graft.pipeline
 
 import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
-import org.apache.spark.sql.expressions.Window
-import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.sources.Fits

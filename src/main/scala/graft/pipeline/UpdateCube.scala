@@ -79,10 +79,7 @@ object UpdateCube {
     if (batch.isEmpty) { incoming.unpersist(); return UpdateSummary(0, 0, 0, 0, 0) }
     val targets = batch.map(_._3).distinct
     def buckets(ts: Iterable[Long]) = ts.map(t => (t >> BucketShift).toInt).toSeq
-    // a schema given up front (the model's case class; partition columns
-    // are discovered) spares each read the job that infers it from a footer
-    def read[T: Encoder](table: String) =
-      spark.read.schema(implicitly[Encoder[T]].schema).parquet(s"$outDir/$table")
+    def read[T: Encoder](table: String) = BuildCube.readTable[T](spark, outDir, table)
     val images = read[ImageObs]("images").as[ImageObs]
     val ml = read[MlCubeRow]("ml_cube") // one listing for the probe and the survivors
 

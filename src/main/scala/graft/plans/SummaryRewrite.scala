@@ -1119,10 +1119,10 @@ object SummaryRewrite {
   private def summaryFrameP(fact: DataFrame, keys: Seq[String],
       sumCols: Seq[String], minMaxCols: Seq[String],
       hllPs: Seq[(String, Int)],
-      histCaps: Seq[(String, Int)] = Seq.empty,
-      exprCols: Seq[(String, String)] = Seq.empty,
-      exprMinMax: Seq[(String, String)] = Seq.empty,
-      exprHistCaps: Seq[(String, String, Int)] = Seq.empty): DataFrame = {
+      histCaps: Seq[(String, Int)],
+      exprCols: Seq[(String, String)],
+      exprMinMax: Seq[(String, String)],
+      exprHistCaps: Seq[(String, String, Int)]): DataFrame = {
     import org.apache.spark.sql.functions._
     // expression measures: sumx_/cntx_ (exprCols) and minx_/maxx_
     // (exprMinMax) partials of an arbitrary deterministic SQL
@@ -3044,8 +3044,6 @@ object SummaryRewrite {
       }
       val dimOutJ: AttributeSet = joinOpt.map(_._4)
         .getOrElse(AttributeSet.empty)
-      val factOutJ: AttributeSet = joinOpt.map(_._3)
-        .getOrElse(AttributeSet.empty)
       // inlining substitution for position entries: Projects stripped
       // between the Expand and the Join compose with the fact side's
       // own aliases (empty in every non-join path — behavior unchanged)
@@ -3410,8 +3408,8 @@ object SummaryRewrite {
         mvAttrs: Map[String, Attribute],
         keys: Set[String],
         hint: Option[AggregateHint],
-        histValPos: Map[Int, AttributeReference] = Map.empty,
-        exprs: Map[String, String] = Map.empty)
+        histValPos: Map[Int, AttributeReference],
+        exprs: Map[String, String])
         : Option[Aggregate] = {
       val remap = (ex: Expression) => ex.transform {
         case a: AttributeReference if mvAttrs.contains(a.name) =>
@@ -3433,8 +3431,6 @@ object SummaryRewrite {
               fresh
             }
           }
-      def agg(fn: AggregateFunction): Expression =
-        AggregateExpression(fn, Complete, isDistinct = false)
       // (position, base fact column) behind a measure pass-through
       def baseOf(a: Attribute): Option[(Int, String)] =
         measureBase.get(a).map { case (i, b) => (i, b.name) }
@@ -5587,7 +5583,7 @@ object SummaryRewrite {
         keys: Set[String],
         dimOut: AttributeSet = AttributeSet.empty,
         hist: Option[HistCtx] = None,
-        exprs: Map[String, String] = Map.empty): Option[NamedExpression] =
+        exprs: Map[String, String]): Option[NamedExpression] =
       e match {
       // dim-side grouping attr passed through unchanged (join path)
       case a: AttributeReference if dimOut.contains(a) => Some(a)

@@ -24,7 +24,8 @@ import org.apache.spark.sql.execution.{SparkPlan, SparkStrategy, UnaryExecNode}
   * per-partition bounded heaps (size k per key, the map-side combine),
   * one shuffle of the ≤ k·keys survivors, then a final heap pass.
   *
-  * What this buys (measured, `graft.tools.TopKBench`): CPU is ~parity
+  * What this buys (measured once by a since-deleted benchmark main,
+  * `TopKBench`, recoverable from git history): CPU is ~parity
   * with Spark 4's own sort-based WindowGroupLimit at in-memory local
   * scale (both scan-bound; radix sort is fast) — the win is MEMORY:
   * WindowGroupLimit's partial stage SORTS the whole map partition, so

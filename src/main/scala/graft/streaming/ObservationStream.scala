@@ -5,16 +5,14 @@ import java.util.UUID
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.streaming.{OutputMode, Trigger}
 
-import graft.functions.Healpix
 import graft.pipeline.{Ingest, SpectrumObs}
-import graft.sources.SdssFits
 
 /** Structured Streaming ingest of new observation batches (SURVEY §7
   * optional extension): new FITS files landing in a directory become
-  * SpectrumObs rows incrementally — the same decode + pyramid kernels as
-  * the batch path, driven by the file stream source. At scale this is
-  * the "update" pipeline: each micro-batch decodes only the newly arrived
-  * files and appends to the zoom-partitioned table.
+  * SpectrumObs rows incrementally — the batch path's decoder
+  * (`Ingest.decodeSpectra`), driven by the file stream source. At scale
+  * this is the "update" pipeline: each micro-batch decodes only the newly
+  * arrived files and appends to the zoom-partitioned table.
   */
 object ObservationStream {
 
@@ -30,27 +28,13 @@ object ObservationStream {
       StructField("modificationTime", TimestampType),
       StructField("length", LongType),
       StructField("content", BinaryType)))
-    spark.readStream.format("binaryFile")
+    val files = spark.readStream.format("binaryFile")
       .schema(binaryFileSchema)
       .option("pathGlobFilter", "*.fits")
       .option("recursiveFileLookup", "true")
       .load(dir)
       .select("path", "content").as[(String, Array[Byte])]
-      .flatMap { case (path, bytes) =>
-        val sp = SdssFits.loadSpectrum(bytes, path, zoomCnt)
-        val name = Ingest.baseName(path)
-        val id = Ingest.stableId(name)
-        val hp = Healpix.ang2pixLonLat(Ingest.SpecHealOrder, sp.ra, sp.dec)
-        val header = sp.header.cards.toMap
-        sp.pyramid.zipWithIndex.map { case ((wl, f, s), z) =>
-          SpectrumObs(z, id, name, sp.ra, sp.dec, sp.time,
-            sp.plateid, sp.mjd, sp.fiberid, hp,
-            SdssFits.toF32Scrubbed1d(wl),
-            SdssFits.toF32Scrubbed1d(f),
-            SdssFits.toF32Scrubbed1d(s),
-            header)
-        }
-      }
+    Ingest.decodeSpectra(files, zoomCnt)
   }
 
   /** Streaming INCREMENTAL UPDATE: each micro-batch of newly arrived

@@ -239,34 +239,27 @@ class MiningOpsSpec extends AnyFunSuite {
   }
 
   test("q97: pivot with explicit values schedules no eager distinct-values job") {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val l = new SparkListener {
-      override def onJobStart(js: SparkListenerJobStart): Unit = jobs.incrementAndGet()
-    }
     // in-memory frame: isolates pivot behavior from parquet listing jobs
     val ev = Seq((1L, "view"), (1L, "click"), (2L, "view"))
       .toDF("user_id", "event_type")
-    spark.sparkContext.addSparkListener(l)
+    val jobs = org.apache.spark.JobCounter.start(spark.sparkContext)
     try {
       // the q97 shape: explicit values — building + optimizing runs no job
       val q = ev.groupBy($"user_id")
         .pivot("event_type", Seq("view", "click", "purchase", "signup", "error"))
         .agg(count(lit(1)))
       q.queryExecution.optimizedPlan
-      Thread.sleep(200) // let any eager job's start event drain to listeners
-      val withValues = jobs.get()
+      val withValues = jobs.count()
       // the anti-shape: no values list — Spark eagerly collects the
       // distinct pivot values DURING construction, a blocking pass
       // never acceptable at scale
       ev.groupBy($"user_id").pivot("event_type").agg(count(lit(1)))
-      Thread.sleep(200)
-      val without = jobs.get()
+      val without = jobs.count()
       assert(withValues == 0,
         "explicit pivot values must keep plan construction job-free")
       assert(without > withValues,
         "omitting the values list must cost an eager distinct-values job")
-    } finally spark.sparkContext.removeSparkListener(l)
+    } finally jobs.stop()
   }
 
   test("q98: transition matrix row mass sums to the from-state total") {

@@ -173,6 +173,16 @@ class PipelineSpec extends AnyFunSuite {
       .where(org.apache.spark.sql.functions.col("zoom") === 3).count())
     val scan = v3.queryExecution.executedPlan.toString
     assert(scan.contains("PartitionFilters"), scan)
+    // both read paths keep an inferred read's names, types and order
+    // (Export and `.as[VizRow]` consume them): data columns, then `zoom`
+    assert(Seq(v3.schema.simpleString,
+      BuildCube.readMlAtZoom(spark, out, 2).schema.simpleString) == Seq(
+      "struct<heal_id:bigint,ra:double,dec:double,time:double,wl:double," +
+        "mean:double,sigma:double,fits_name:string,zoom:int>",
+      "struct<target_healpix:bigint,image_cube:array<array<array<float>>>," +
+        "image_errors:array<array<array<float>>>,spectral_cube:array<float>," +
+        "spectral_errors:array<float>,n_spectra:int,spec_ids:array<bigint>," +
+        "image_ids:array<bigint>>"))
   }
 
   test("similarity read path: nearest target by target_distance, top-k plan") {

@@ -2,12 +2,10 @@ package graft.pipeline
 
 import java.nio.file.{Files, Path}
 import java.util.concurrent.ConcurrentLinkedQueue
-import java.util.concurrent.atomic.AtomicInteger
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.ListenerBusDrain
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.{JobCounter, ListenerBusDrain}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.{Attribute, DynamicPruning, EqualTo, Expression, In, InSet, Literal}
 import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution, SparkPlan}
@@ -274,10 +272,6 @@ class UpdateSpec extends AnyFunSuite {
     val out = dir.resolve("cube_budget").toString
     BuildCube.build(spark, specInit.toString, dir.resolve("images").toString, ccdConfig, out)
     ListenerBusDrain(spark.sparkContext)
-    val jobs = new AtomicInteger(0)
-    val jobCounter = new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit = { jobs.incrementAndGet(); () }
-    }
     val plans = new ConcurrentLinkedQueue[(String, SparkPlan)]()
     val planCollector = new QueryExecutionListener {
       def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit = {
@@ -285,15 +279,14 @@ class UpdateSpec extends AnyFunSuite {
       }
       def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
     }
-    spark.sparkContext.addSparkListener(jobCounter)
+    val jobs = JobCounter.start(spark.sparkContext)
     spark.listenerManager.register(planCollector)
     val s = try UpdateCube.update(spark, out, specNew.toString) finally {
-      ListenerBusDrain(spark.sparkContext)
-      spark.sparkContext.removeSparkListener(jobCounter)
+      jobs.stop() // drains the bus, so planCollector has every plan too
       spark.listenerManager.unregister(planCollector)
     }
     assert(s.newSpectra == 5 && s.affectedTargets == 1)
-    assert(jobs.get() <= UpdateJobCeiling, s"update ran ${jobs.get()} jobs")
+    assert(jobs.count() <= UpdateJobCeiling, s"update ran ${jobs.count()} jobs")
 
     // the rows surviving the ml_cube rewrite are read from literal buckets
     val executed = plans.asScala.toSeq

@@ -248,7 +248,7 @@ class StreamingSpec extends AnyFunSuite {
         DocumentStream.nearDupDedupBatch(b1, store, 0.8, Some("batch_1"),
           maxCandidates = 10, allowLossy = true,
           warnAtOccupancy = warn, onWarn = sink.append(_)).count()
-        Thread.sleep(500) // listener bus drain
+        org.apache.spark.ListenerBusDrain(spark.sparkContext)
       } finally spark.sparkContext.removeSparkListener(counter)
       nExec.get()
     }
@@ -334,20 +334,13 @@ class StreamingSpec extends AnyFunSuite {
     // tag discovery is metadata-only: checking an already-consolidated
     // store runs ZERO Spark jobs (two directory listings, no scans —
     // the old shape paid two full-store distinct() jobs per check)
-    val nJobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val counter = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        nJobs.incrementAndGet(); ()
-      }
-    }
-    spark.sparkContext.addSparkListener(counter)
+    val jobs = org.apache.spark.JobCounter.start(spark.sparkContext)
     try {
       DocumentStream.compactSigStore(spark, store) // no-op: one tag
-      Thread.sleep(500) // listener bus drain
-      assert(nJobs.get() == 0,
-        s"no-op compaction launched ${nJobs.get()} Spark job(s)")
-    } finally spark.sparkContext.removeSparkListener(counter)
+      val nJobs = jobs.count()
+      assert(nJobs == 0,
+        s"no-op compaction launched $nJobs Spark job(s)")
+    } finally jobs.stop()
     graft.operators.TextOps.deleteRecursively(base)
   }
 
