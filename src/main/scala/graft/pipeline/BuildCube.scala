@@ -3,13 +3,18 @@ package graft.pipeline
 import org.apache.spark.sql.{DataFrame, Encoder, SaveMode, SparkSession}
 import org.apache.spark.sql.functions.{col, shiftright}
 
+import graft.Jobs
+
 /** Full cube construction — the analogue of `hisscube.py <in> <out>
   * create` (reference §3.1 builder list: metadata-cache → metadata →
   * data → link → visualization → ml-cube). In Spark the phases are five
-  * table writes over one shared, cached ingest (about 30 Spark jobs in
-  * all, counting the range-partition samples and AQE's stage jobs);
-  * ordering is only data-dependency, not hand-scheduling.
-  * Each write counts its own rows for the returned [[Summary]].
+  * table writes over three cached inputs (spectra, images, links). The
+  * writes depend only on those caches, so they run as five concurrent
+  * Spark jobs ([[graft.Jobs.all]]): 34–35 jobs in all on the perfbench
+  * `cube` build, counting the range-partition samples and AQE's stage
+  * jobs. Up to ten of those are AQE table-cache stages, because several
+  * writes plan one for the same cache before it fills. Each write counts
+  * its own rows for the returned [[Summary]].
   *
   * Usage: BuildCube <spectraDir> <imagesDir> <ccdConfigDir> <outDir>
   *
@@ -34,30 +39,29 @@ object BuildCube {
     // flatten: cached, so each FITS file is decoded once
     val spectra = Ingest.spectra(spark, spectraDir).cache()
     val images = Ingest.images(spark, imagesDir, ccdConfigDir).cache()
-
-    val nSpectra = Ingest.writeSorted(spectra, s"$outDir/spectra")
-    val nImages = Ingest.writeSorted(images, s"$outDir/images")
-
     // feeds its write, the ML stack and the viz flatten
     val links = Link.linkCutouts(spectra, images).cache()
-    val nLinks = Ingest.writeCounted(links.toDF())(_.write.mode(SaveMode.Overwrite)
-      .partitionBy("zoom").parquet(s"$outDir/cutout_links"))
 
-    // (zoom, spatial-bucket) partitioning so the incremental update phase
-    // (UpdateCube) can dynamic-overwrite only the buckets it re-stacks
-    val nMl = Ingest.writeCounted(MlCube.build(spectra, links, images).toDF()
-      .withColumn("bucket", shiftright(col("target_healpix"), UpdateCube.BucketShift)))(
-      _.write.mode(SaveMode.Overwrite).partitionBy("zoom", "bucket").parquet(s"$outDir/ml_cube"))
+    // the five writes read only the three caches: concurrent jobs. Viz
+    // and ML are the longest, and under FIFO the earlier job claims free
+    // cores first. The flatten is not cached: the range partitioner's
+    // sample reruns it, which costs less than building a columnar cache.
+    val Seq(nViz, nMl, nSpectra, nImages, nLinks) = Jobs.all(
+      () => Ingest.writeCounted(VizCube.build(spectra, links, images).toDF()
+        .repartitionByRange(col("zoom"), col("heal_id"))
+        .sortWithinPartitions("zoom", "heal_id"))(
+        _.write.mode(SaveMode.Overwrite).partitionBy("zoom").parquet(s"$outDir/viz_cube")),
+      // (zoom, spatial-bucket) partitioning so the incremental update phase
+      // (UpdateCube) can dynamic-overwrite only the buckets it re-stacks
+      () => Ingest.writeCounted(MlCube.build(spectra, links, images).toDF()
+        .withColumn("bucket", shiftright(col("target_healpix"), UpdateCube.BucketShift)))(
+        _.write.mode(SaveMode.Overwrite).partitionBy("zoom", "bucket").parquet(s"$outDir/ml_cube")),
+      () => Ingest.writeSorted(spectra, s"$outDir/spectra"),
+      () => Ingest.writeSorted(images, s"$outDir/images"),
+      () => Ingest.writeCounted(links.toDF())(_.write.mode(SaveMode.Overwrite)
+        .partitionBy("zoom").parquet(s"$outDir/cutout_links")))
 
-    // cached: the range partitioner's sampling job would otherwise run
-    // the viz flatten a second time
-    val viz = VizCube.build(spectra, links, images).cache()
-    val nViz = Ingest.writeCounted(viz.toDF()
-      .repartitionByRange(col("zoom"), col("heal_id"))
-      .sortWithinPartitions("zoom", "heal_id"))(
-      _.write.mode(SaveMode.Overwrite).partitionBy("zoom").parquet(s"$outDir/viz_cube"))
-
-    Seq(spectra, images, links, viz).foreach(_.unpersist())
+    Seq(spectra, images, links).foreach(_.unpersist())
     Summary(nSpectra, nImages, nLinks, nMl, nViz)
   }
 

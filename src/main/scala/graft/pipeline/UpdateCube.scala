@@ -3,6 +3,7 @@ package graft.pipeline
 import org.apache.spark.sql.{DataFrame, Dataset, Encoder, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Jobs
 import graft.functions.Healpix
 import graft.operators.TextOps
 
@@ -28,6 +29,13 @@ import graft.operators.TextOps
   * targets ≤ repeats × stale targets — ≈ 50 B per batch spectrum, under
   * 1 MB of literals per plan at 10k spectra; feed larger inputs as
   * smaller batches (as the streaming entry does).
+  *
+  * Writes: two waves of concurrent Spark jobs ([[graft.Jobs.all]]).
+  * Wave 1 appends `spectra` and `cutout_links`, which read only the
+  * batch and `images`; wave 2 rewrites the `ml_cube` buckets and appends
+  * `viz_cube`, which read what wave 1 wrote. A crash mid-wave can leave
+  * either write of a wave done without the other; the per-table probe
+  * makes the retry finish exactly the rest (crash law in UpdateSpec).
   *
   * Cost: the appends write O(new data); the `ml_cube` rewrite reads and
   * writes only the affected (zoom, bucket) partitions. Batch-bounded
@@ -60,9 +68,12 @@ object UpdateCube {
       newSpecsIn: Dataset[SpectrumObs]): UpdateSummary = {
     import spark.implicits._
 
-    // CONVERGENT RETRY DESIGN: the sequence (append spectra → append
-    // links → overwrite ML buckets → append viz) is not atomic and a
-    // transactional table format is out of scope, so each table derives
+    // CONVERGENT RETRY DESIGN: the writes run as two waves of concurrent
+    // jobs — {append spectra, append links}, then {overwrite ML buckets,
+    // append viz} — and nothing is atomic (a transactional table format
+    // is out of scope). A crash can therefore leave any subset of a wave's
+    // writes done: links without spectra, or viz without the ML rewrite,
+    // as well as every prefix of the serial order. So each table derives
     // its own missing-work set from the INCOMING batch (not one "new
     // spectra" filter, which would skip unfinished ML/viz steps forever):
     // a retry after a failure at ANY step completes exactly the remaining
@@ -120,18 +131,19 @@ object UpdateCube {
       _.write.mode(SaveMode.Append).partitionBy("zoom").parquet(s"$outDir/$table"))
     def ofIds(ds: Dataset[_], ids: Seq[Long]) = ds.toDF().where(col("spec_id").isin(ids: _*))
 
+    // wave 1, two concurrent jobs over the batch alone:
     // 1. spectra: append only observations not already present
-    val nNewSpectra = if (newRows.isEmpty) 0L
-      else append(ofIds(incoming, newRows.map(_._1)), "spectra")
-
     // 2. links: link incoming spectra that have none yet (per-spectrum → append)
     val unlinked = batch.map(_._1).filterNot(linked)
-    val nNewLinks = if (unlinked.isEmpty) 0L else append(Link.linkCutouts(
-      ofIds(incoming, unlinked).as[SpectrumObs], images).toDF(), "cutout_links")
-    val links = read[CutoutLink]("cutout_links") // after step 2; the re-stack and viz share it
+    val Seq(nNewSpectra, nNewLinks) = Jobs.all(
+      () => if (newRows.isEmpty) 0L else append(ofIds(incoming, newRows.map(_._1)), "spectra"),
+      () => if (unlinked.isEmpty) 0L else append(Link.linkCutouts(
+        ofIds(incoming, unlinked).as[SpectrumObs], images).toDF(), "cutout_links"))
+    val links = read[CutoutLink]("cutout_links") // after wave 1; the re-stack and viz share it
 
+    // wave 2, two concurrent jobs over the tables wave 1 completed:
     // 4.+5. re-stack stale targets from the UPDATED tables; rewrite their (zoom, bucket)s
-    val mlRowCount = if (stale.isEmpty) 0L else {
+    def restack(): Long = if (stale.isEmpty) 0L else {
       val mlNew = MlCube.build(
         read[SpectrumObs]("spectra").where(col("healpix").isin(stale.toSeq: _*)).as[SpectrumObs],
         ofIds(links, after.filter(a => stale.contains(a._2)).map(_._1)).as[CutoutLink], images)
@@ -154,18 +166,17 @@ object UpdateCube {
           .partitionBy("zoom", "bucket").parquet(s"$outDir/ml_cube"))
       finally TextOps.releaseLocalCheckpoint(mlRewrite)
     }
-
     // 6. viz rows are per-observation → append, for incoming spectra not in
-    // the viz cube yet (cutout-pixel rows ride along, from step 2's links)
+    // the viz cube yet (cutout-pixel rows ride along, from step 2's links);
+    // the range partitioner's sample reruns the flatten, which costs less
+    // than caching it
     val vizSpecs = batch.filterNot(b => inViz(b._2))
-    val vizCount = if (vizSpecs.isEmpty) 0L else {
-      // cached: the range partitioner's sample would otherwise rerun the flatten
-      val vizNew = VizCube.build(ofIds(incoming, vizSpecs.map(_._1)).as[SpectrumObs],
-        ofIds(links, vizSpecs.map(_._1)).as[CutoutLink], images).cache()
-      try append(vizNew.toDF().repartitionByRange(col("zoom"), col("heal_id"))
+    def vizAppend(): Long = if (vizSpecs.isEmpty) 0L else append(
+      VizCube.build(ofIds(incoming, vizSpecs.map(_._1)).as[SpectrumObs],
+        ofIds(links, vizSpecs.map(_._1)).as[CutoutLink], images).toDF()
+        .repartitionByRange(col("zoom"), col("heal_id"))
         .sortWithinPartitions("zoom", "heal_id"), "viz_cube")
-      finally vizNew.unpersist()
-    }
+    val Seq(mlRowCount, vizCount) = Jobs.all(() => restack(), () => vizAppend())
 
     incoming.unpersist()
     UpdateSummary(nNewSpectra, nNewLinks, stale.size, mlRowCount, vizCount)

@@ -6,6 +6,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.OutputMode
 
+import graft.Jobs
+
 /** Streaming document ingest with exact dedup-at-ingest — the streaming
   * face of the batch curation surface: as document batches arrive, drop
   * every document whose content hash has been seen before, so the
@@ -258,29 +260,10 @@ object DocumentStream {
         "the accounting sidecar's existing write (zero extra jobs); " +
         "strict mode refuses loudly at the cap instead")
     val spark = batch.sparkSession
-    // the store sides' read SETUP (directory listing + schema + relation
-    // resolution) is pure DRIVER work — kick it onto a background thread
-    // NOW so it overlaps the signature planning + bucket-collect job
-    // below (guide §2.6's overlap discipline applied to driver-side
-    // latency; measured ~0.15 s of listing per probe batch that used to
-    // sit between jobs). Existence is pre-checked with one cheap
-    // filesystem call so a fresh store still skips every read; any
-    // NON-missing-path read failure propagates at the await exactly as
-    // it did inline.
-    import scala.concurrent.{Await, ExecutionContext, Future}
-    import scala.concurrent.duration.Duration
-    implicit val ec: ExecutionContext = ExecutionContext.global
     val bandsExist = {
       val p = new org.apache.hadoop.fs.Path(s"$sigStore/bands")
       p.getFileSystem(spark.sessionState.newHadoopConf()).exists(p)
     }
-    val storeF =
-      if (!bandsExist) None
-      else Some(Future(storeBandsFrame(spark, sigStore)))
-    val sigsReadF =
-      if (!bandsExist) None
-      else Some(Future(scala.util.Try(
-        spark.read.parquet(s"$sigStore/sigs"))))
     // batch-sized; consumed four times. LAZY localCheckpoint: the first
     // action over it (bucket collect with a store, otherwise the drops
     // write / member collect) materializes the blocks, so pinning the
@@ -290,19 +273,31 @@ object DocumentStream {
     // it was meant to replace) the checkpoint stores raw row blocks and
     // TRUNCATES lineage, so the store writes' recacheByPath can never
     // invalidate-and-recompute it.
-    val newSigs = TextOps.signatureFrame(batch).localCheckpoint(false)
-    // narrow projection over the cached signatures — consumers
-    // recompute it for free
-    val newBands = bucketedBands(newSigs)
+    lazy val newSigs = TextOps.signatureFrame(batch).localCheckpoint(false)
     // the batch's bucket footprint prunes the store scan — but on a
     // FRESH store there is nothing to prune, so the collect (a whole
     // distinct-shuffle action) only runs when a store exists. Bounded:
     // ≤ LshBands × BandBuckets distinct buckets.
-    val buckets =
-      if (!bandsExist) Seq.empty[(Int, Int)]
-      else newBands.select(col("band"), col("pbucket")).distinct()
-        .collect().map(r => (r.getInt(0), r.getInt(1))).toSeq
-    val store = storeF.map(Await.result(_, Duration.Inf)).getOrElse(None)
+    lazy val footprint = bucketedBands(newSigs)
+      .select(col("band"), col("pbucket")).distinct()
+      .collect().map(r => (r.getInt(0), r.getInt(1))).toSeq
+    // the store sides' read SETUP (directory listing + schema + relation
+    // resolution) is pure DRIVER work — it runs beside the signature
+    // planning + bucket-collect job as concurrent actions (guide §2.6's
+    // overlap discipline applied to driver-side latency; measured
+    // ~0.15 s of listing per probe batch that used to sit between jobs).
+    // Existence is pre-checked with one cheap filesystem call so a fresh
+    // store still skips every read; all three are awaited, so any
+    // NON-missing-path read failure fails the batch here, before any
+    // store write.
+    lazy val storeRead = storeBandsFrame(spark, sigStore)
+    lazy val storeSigs = spark.read.parquet(s"$sigStore/sigs")
+    if (bandsExist) Jobs.all(() => storeRead, () => storeSigs, () => footprint)
+    val store = if (bandsExist) storeRead else None
+    val buckets = if (bandsExist) footprint else Seq.empty[(Int, Int)]
+    // narrow projection over the pinned signatures — consumers
+    // recompute it for free
+    val newBands = bucketedBands(newSigs)
     // the pruned slice feeds BOTH the band probe and the rep/pdoc meta
     // lookup — lazily checkpointed so the store is scanned once per
     // batch (materialized by the pdoc collect below, no eager job)
@@ -351,14 +346,9 @@ object DocumentStream {
     val shCols = (d: DataFrame) => d.select(col("doc_id"), col("sh_set"))
     val verifySigs =
       if (pdocs.isEmpty) shCols(newSigs)
-      else {
-        // pdocs nonEmpty ⇒ a store exists ⇒ the background read was
-        // launched; a sigs-side read failure surfaces here — exactly
-        // where the inline read used to throw
-        val sigsDf = Await.result(sigsReadF.get, Duration.Inf).get
-        shCols(sigsDf.filter(col("pdoc").isin(pdocs: _*)))
+      else // pdocs nonEmpty ⇒ a store exists ⇒ its sigs side was read
+        shCols(storeSigs.filter(col("pdoc").isin(pdocs: _*)))
           .unionByName(shCols(newSigs))
-      }
     val pairs = TextOps.verifyPairs(cand, verifySigs, threshold)
     val members = TextOps.clusterMembersFromPairs(pairs)
     // transitive resolution: each member's candidate rep is its STORED
@@ -412,13 +402,12 @@ object DocumentStream {
     // action round-trips. Shared upstream state is checkpoint-pinned
     // (newSigs, assign, rnFrame), so a concurrent first-touch at worst
     // computes a small frame twice — never against a mutated store.
-    // Failures propagate: every write is awaited before return, and a
-    // partial failure leaves the same state as a sequential one —
-    // tagged replays overwrite their own btag partitions idempotently.
+    // Failures propagate: Jobs.all awaits every write before it throws
+    // (a retry never races an orphaned write on the same btag partition
+    // directories), and a partial failure leaves the same state as a
+    // sequential one — tagged replays overwrite their own btag
+    // partitions idempotently.
     locally {
-      import scala.concurrent.{Await, ExecutionContext, Future}
-      import scala.concurrent.duration.Duration
-      implicit val ec: ExecutionContext = ExecutionContext.global
       // opt-in bucket-heat early warning (the sigStoreStats
       // max_bucket_occupancy signal, wired into the ingest path): the
       // accounting row already aggregates max_degree over the probe's
@@ -432,30 +421,17 @@ object DocumentStream {
           max(col("n_capped_pairs")).as("n_capped_pairs"))
         case None => nCapped
       }
-      val writes = Seq(
-        Future(writeStorePart(reppedSigs,
+      Jobs.all(Seq(
+        () => writeStorePart(reppedSigs,
           s"$sigStore/sigs", batchTag, Seq.empty, Seq("pdoc"),
-          chunkExpr = Some(sigsChunk), nChunks = SigBuckets)),
-        Future(writeStorePart(
+          chunkExpr = Some(sigsChunk), nChunks = SigBuckets),
+        () => writeStorePart(
           bucketedBands(reppedSigs, carry = Seq("rep", "pdoc")),
           s"$sigStore/bands", batchTag, Seq("band"), Seq("pbucket"),
-          chunkExpr = Some(bandsChunk), nChunks = 32))) ++
-        (if (allowLossy) Seq(Future(writeStorePart(
-          dropsFrame, s"$sigStore/drops", batchTag, Seq.empty, Seq.empty)))
-         else Seq.empty)
-      // await ALL writes before surfacing any failure: throwing at the
-      // first failed future would orphan still-running store writes,
-      // and the foreachBatch retry (or the caller's tmp cleanup) would
-      // then race the orphans on the same btag partition directories.
-      // The catch is Throwable, NOT scala.util.Try/NonFatal — a
-      // query-stop InterruptedException must also finish the await
-      // ladder before unwinding, or the writes it abandoned keep
-      // mutating the store behind the retry
-      val outcomes = writes.map { w =>
-        try { Await.result(w, Duration.Inf); None }
-        catch { case t: Throwable => Some(t) }
-      }
-      outcomes.flatten.foreach(t => throw t)
+          chunkExpr = Some(bandsChunk), nChunks = 32)) ++
+        (if (allowLossy) Seq(() => writeStorePart(
+          dropsFrame, s"$sigStore/drops", batchTag, Seq.empty, Seq.empty))
+         else Seq.empty): _*)
       for (f <- warnAtOccupancy; o <- obs) {
         // the observed write was awaited above, so `get` returns
         // immediately (it blocks only until its action completes)
@@ -581,30 +557,17 @@ object DocumentStream {
     // store-write pattern): each alone underfills the cluster with
     // this layout's bounded task counts, and the staging renames below
     // happen only after BOTH complete, so crash-safety is unchanged
-    locally {
-      import scala.concurrent.{Await, ExecutionContext, Future}
-      import scala.concurrent.duration.Duration
-      implicit val ec: ExecutionContext = ExecutionContext.global
-      val writes = Seq(
-        Future(writeStorePart(
-          spark.read.parquet(s"$sigStore/sigs").drop("btag")
-            .dropDuplicates("doc_id"),
-          s"$staging/sigs", Some(next), Seq.empty, Seq("pdoc"),
-          chunkExpr = Some(sigsChunk), nChunks = SigBuckets)),
-        Future(writeStorePart(
-          spark.read.parquet(s"$sigStore/bands").drop("btag")
-            .dropDuplicates("doc_id", "band"),
-          s"$staging/bands", Some(next), Seq("band"), Seq("pbucket"),
-          chunkExpr = Some(bandsChunk), nChunks = 32)))
-      // await ALL before surfacing any failure (the batch-write rule:
-      // throwing at the first failure would orphan the other side's
-      // still-running staging write)
-      val outcomes = writes.map { w =>
-        try { Await.result(w, Duration.Inf); None }
-        catch { case t: Throwable => Some(t) }
-      }
-      outcomes.flatten.foreach(t => throw t)
-    }
+    Jobs.all(
+      () => writeStorePart(
+        spark.read.parquet(s"$sigStore/sigs").drop("btag")
+          .dropDuplicates("doc_id"),
+        s"$staging/sigs", Some(next), Seq.empty, Seq("pdoc"),
+        chunkExpr = Some(sigsChunk), nChunks = SigBuckets),
+      () => writeStorePart(
+        spark.read.parquet(s"$sigStore/bands").drop("btag")
+          .dropDuplicates("doc_id", "band"),
+        s"$staging/bands", Some(next), Seq("band"), Seq("pbucket"),
+        chunkExpr = Some(bandsChunk), nChunks = 32))
     for (side <- Seq("sigs", "bands")) {
       val src = new org.apache.hadoop.fs.Path(s"$staging/$side/btag=$next")
       val dst = new org.apache.hadoop.fs.Path(s"$sigStore/$side/btag=$next")

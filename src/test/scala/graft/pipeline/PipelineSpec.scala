@@ -144,9 +144,14 @@ class PipelineSpec extends AnyFunSuite {
 
   test("BuildCube: full construction writes the partitioned layout; V3 reads back pruned") {
     val out = graft.TempDirs.create("out").toString
-    val s = BuildCube.build(spark,
+    val (s, plans) = CubePlans.collecting(spark)(BuildCube.build(spark,
       root.resolve("spectra").toString, root.resolve("images").toString,
-      ccdConfig, out)
+      ccdConfig, out))
+    // the viz write reruns the flatten for the range sample rather than
+    // read it from a cache (the ingest and link caches it reads are fine)
+    val vizWrites = plans.filter(p => CubePlans.writes(p._2, "viz_cube"))
+    assert(vizWrites.size == 1, plans.map(_._1))
+    assert(CubePlans.cachedFlattens(vizWrites.head._2).isEmpty, vizWrites.head._2)
     assert(s.spectra == 15 && s.images == 50)
     assert(s.links == 75)
     assert(s.mlRows == 10)
